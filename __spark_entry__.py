@@ -1632,7 +1632,7 @@ def q_classify_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
     model = FrozenTextClassifier.load(spark, ML_FROZEN)
     docs = _par(spark, _t(spark, sf_dir, "documents")
                 .withColumnRenamed("text", "extracted_text"))
-    out = classify_with_ml_vote(docs, cfg, model, id_col="doc_id")
+    out = classify_with_ml_vote(docs, cfg, model)
     return out.select("doc_id", "technique_1", "technique_2",
                       "technique_3", "technique_4", "category",
                       "vote_confidence")

@@ -661,9 +661,12 @@ def _rep_counts_udf():
     ``len(line.strip(' ')) > 0``, the verified mirror of
     ``length(trim(line)) > 0``; char counts are code points, matching
     ``F.length``) and the max token-bigram count (tokens = the pinned
-    ml_classify ``_WS_SPLIT`` class, bigrams counted as adjacent token
-    PAIRS — tokens cannot contain spaces, so pair identity equals the
-    space-joined gram identity the expression form counts).
+    ml_classify ``_WS_SPLIT`` class over the JVM-LOWERCASED text — the
+    second argument, ``F.lower(text)``, exactly what ``tokens_col`` and
+    the oracle split — bigrams counted as adjacent token PAIRS — tokens
+    cannot contain spaces, so pair identity equals the space-joined gram
+    identity the expression form counts). Line counters read the raw
+    text, as in the oracle.
 
     Every output is an exact integer; the IEEE ratio math stays in the
     JVM select unchanged. Why: the expression form spent ~6.5 s of
@@ -689,10 +692,10 @@ def _rep_counts_udf():
                  _SF("_top2", LongType(), False)])
 
     @pandas_udf(out_t)
-    def rep_counts(text):  # no hints: annotations future, local imports
+    def rep_counts(text, lowered):  # no hints (annotations future)
         from collections import Counter
         nl, nd, dc, tc, t2 = [], [], [], [], []
-        for s in text:
+        for s, lo in zip(text, lowered):
             s = s or ""
             lines = Counter(ln for ln in s.split("\n")
                             if len(ln.strip(" ")) > 0)
@@ -703,7 +706,7 @@ def _rep_counts_udf():
                 tot += ch
                 if c > 1:
                     dup += ch
-            toks = [t for t in ws_re.split(s) if t]
+            toks = [t for t in ws_re.split(lo or "") if t]
             top2 = 0
             if len(toks) >= 2:
                 top2 = max(Counter(zip(toks, toks[1:])).values())
@@ -744,7 +747,8 @@ def repetition_signals(docs: DataFrame, *, id_col: str = "doc_id",
     base = docs.select(
         F.col(id_col),
         token_count_col(F.col(text_col)).alias("_ntok"),
-        rep_counts(F.col(text_col)).alias("_rc"))
+        rep_counts(F.col(text_col), F.lower(F.col(text_col)))
+        .alias("_rc"))
     out = base.select(id_col, "_ntok",
                       F.col("_rc._n_lines").alias("_n_lines"),
                       F.col("_rc._n_distinct").alias("_n_distinct"),

@@ -1,15 +1,16 @@
 """Deduplication operators for training-data pipelines.
 
 Four tiers, each a standard large-corpus technique expressed Spark-first
-(no Python in the hot path — everything below is JVM built-ins /
-higher-order functions, so whole-stage codegen applies):
+(JVM built-ins for normalization, joins and aggregation; the per-row
+integer kernels — shingling, MinHash and SimHash signatures — run as
+Arrow-batched pandas UDFs over JVM-normalized text):
 
 - **exact**      — md5 fingerprint hash-groupBy (one shuffle on a 16-byte
                    key; map-side partial agg).
 - **MinHash+LSH**— k-permutation signatures computed *shuffle-free* per row
-                   (``array_min`` over ``transform``-hashed shingles), then
-                   banded: only the (band_idx, band_hash) explode shuffles,
-                   and its fan-out is b rows/doc (b=16), so the candidate
+                   (an Arrow kernel over JVM-normalized text,
+                   ``core.minhash``), then banded: only the
+                   (band_idx, band_hash) explode shuffles, and its fan-out is b rows/doc (b=16), so the candidate
                    join touches a tiny fraction of the corpus — the 100 TB
                    scale path.
 - **SimHash**    — 64-bit signature via per-bit weighted majority over
@@ -91,7 +92,7 @@ def exact_rep_rows(df: DataFrame, text_col: str = "text",
     representatives; exact-duplicate members inherit the verdict
     through ``is_dup`` (with_curation_flags) or by not being cluster
     representatives (near_dedup). One groupBy on the 16-byte
-    fingerprint with map-side combine — the same shape as exact_dedup.
+    fingerprint.
 
     The winner is picked in the LONG domain with the string id as
     tie-break — the SAME ordering the near path's exact-dup window
@@ -104,6 +105,17 @@ def exact_rep_rows(df: DataFrame, text_col: str = "text",
     each ran full-corpus shingling before, so this strictly reduces
     per-consumer work — a checkpointed run materializes the final reps
     table instead (plans.checkpoint._near_reps_stage).
+
+    The exchange has an EXPLICIT partition count
+    (``spark.sql.shuffle.partitions``, as ``skew.restore_order``): the
+    groupBy reuses that hash partitioning, so no exchange is added, and
+    AQE never coalesces a repartition with a count. Left to AQE, the
+    small (id, text) shuffle coalesced to ONE partition and every
+    consumer — the MinHash kernel and band explode, the verify
+    shingling, the checkpointed reps stage — ran as a single task
+    (measured: the band stage 1 task for 3.35 s on local[4]). The
+    price: duplicates no longer combine map-side before the exchange
+    (+2.4% shuffle bytes on 4k documents with 10% exact copies).
     """
     from documentai_spark.functions.ids import checked_long
 
@@ -113,18 +125,22 @@ def exact_rep_rows(df: DataFrame, text_col: str = "text",
                    F.col(id_col).cast("string").alias("_s"),
                    F.col(id_col).alias("_id"),
                    F.col(text_col).alias("_text"))
+    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     return (df.select(fingerprint_col(F.col(text_col)).alias("_erfp"),
                       row.alias("_row"))
+              .repartition(n, "_erfp")
               .groupBy("_erfp").agg(F.min("_row").alias("_row"))
               .select(F.col("_row._id").alias(id_col),
                       F.col("_row._text").alias(text_col)))
 
 
 def shingle_udf(w: int = 3):
-    """The Arrow-batched shingler over PRE-NORMALIZED text, shared by
-    :func:`with_shingles` (batch) and
-    :func:`with_minhash_signature_local` (the streaming signature
-    projection) so both paths shingle bit-identically.
+    """The Arrow-batched shingler over PRE-NORMALIZED text, used by
+    :func:`with_shingles` (the verify join and the
+    :func:`minhash_signatures_agg` reference engine). The per-document
+    logic is ``core.minhash.shingles``, which the signature kernel
+    (:func:`minhash_signature_udf`) calls too, so both shingle
+    bit-identically.
 
     Why a pandas UDF and not the ``transform``/``slice`` column form
     (kept below as ``shingle_col`` for short-text uses): higher-order
@@ -141,19 +157,11 @@ def shingle_udf(w: int = 3):
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
+    from documentai_spark.core.minhash import shingles as _shingles
+
     @pandas_udf("array<string>")
-    def shingles(norm):  # no hints: module-level `annotations` future +
-        out = []         # local pandas import break hint resolution
-        for s in norm:
-            toks = (s or "").split(" ")
-            if len(toks) >= w:
-                sh = [" ".join(toks[i:i + w])
-                      for i in range(len(toks) - w + 1)]
-            else:
-                sh = [s or ""]
-            # first-occurrence distinct == array_distinct semantics
-            out.append(list(dict.fromkeys(sh)))
-        return pd.Series(out)
+    def shingles(norm):  # no hints (annotations future)
+        return pd.Series([_shingles(s, w) for s in norm])
 
     return shingles
 
@@ -168,49 +176,59 @@ def with_shingles(df: DataFrame, text_col: str, out_col: str = "_sh",
     return normed.select(id_col, shingles(F.col("_norm")).alias(out_col))
 
 
+def minhash_signature_udf(num_hashes: int = 64, w: int = 3):
+    """Arrow-batched MinHash kernel over PRE-NORMALIZED text (exactly
+    ``normalized_text``, computed JVM-side): one ``array<long>`` per
+    row, ``core.minhash.signatures`` — the doc's distinct w-shingles
+    hashed under k salted XXH64 permutations in a numpy port of Spark's
+    ``hashUnsafeBytes``, min taken signed. Bit-identical to
+    ``F.xxhash64(F.lit(i), shingle)`` folded with ``least`` (pinned by
+    tests/test_dedup.py::test_xxhash64_port_matches_spark and
+    tests/test_streaming_near_dedup.py::test_local_signature_bit_identity).
+
+    Why a kernel: the ``transform``/``aggregate``/``zip_with`` fold it
+    replaces ran interpreted (higher-order functions have no codegen),
+    building a k-long array per shingle and a new accumulator per fold
+    step, behind an Arrow round trip of the whole shingle array; here
+    each shingle's bytes are read once and the k lanes are numpy
+    columns."""
+    import pandas as pd
+    from pyspark.sql.functions import pandas_udf
+
+    from documentai_spark.core.minhash import signatures
+
+    @pandas_udf("array<long>")
+    def minhash_sig(norm):  # no hints (annotations future)
+        return pd.Series(list(signatures(norm, num_hashes, w)))
+
+    return minhash_sig
+
+
 def with_minhash_signature_local(df: DataFrame, text_col: str = "text",
                                  num_hashes: int = 64,
                                  out_col: str = "_sig",
                                  w: int = 3) -> DataFrame:
     """MinHash signature as an added column, computed DOC-LOCALLY — no
     aggregation, so it runs on STREAMS (where
-    :func:`minhash_signatures`'s explode+groupBy would be a stateful
+    :func:`minhash_signatures_agg`'s explode+groupBy would be a stateful
     streaming aggregation) and keeps every input column.
 
-    Bit-identical to :func:`minhash_signatures` (pinned by
-    tests/test_streaming_near_dedup): same pandas-UDF shingler, same
-    salted-``xxhash64`` permutations; the min folds over the
-    MATERIALIZED shingle array in ONE traversal
-    (``aggregate`` + ``zip_with(least)`` over a per-element array of the
-    k hashes — measured ~5x faster than k separate
-    ``array_min(transform(...))`` passes, and safe from the
-    re-inlined-subtree trap ``shingle_col`` documents because the
-    shingles sit behind the UDF's Arrow boundary). The per-permutation
-    salts are baked with ``F.lit(i)`` inside the comprehension — never a
-    lambda default arg (the r4 (element, index) HOF-dispatch trap)."""
-    clash = {"_mhl_norm", "_mhl_shs", out_col} & set(df.columns)
-    if clash:
+    One Arrow kernel (:func:`minhash_signature_udf`) over the JVM
+    ``normalized_text``: shingling, hashing and the per-permutation min
+    all happen inside it, so no shingle array crosses the boundary.
+    Bit-identical to :func:`minhash_signatures_agg` (pinned by
+    tests/test_streaming_near_dedup.py::test_local_signature_bit_identity);
+    the batch path (:func:`minhash_signatures`) and the streaming path
+    share this function."""
+    if out_col in df.columns:
         # "keeps every input column" is the contract — withColumn would
-        # silently clobber a same-named input and the trailing drop()
-        # would delete it (r7 review; the with_curation_flags guard
-        # family)
+        # silently clobber a same-named input (r7 review; the
+        # with_curation_flags guard family)
         raise ValueError(
-            f"input columns collide with with_minhash_signature_local "
-            f"internals/output: {sorted(clash)}")
-    shingles = shingle_udf(w)
-    staged = (df.withColumn("_mhl_norm", normalized_text(F.col(text_col)))
-                .withColumn("_mhl_shs", shingles(F.col("_mhl_norm"))))
-    per_shingle = F.transform(
-        F.col("_mhl_shs"),
-        lambda s: F.array(*[F.xxhash64(F.lit(i), s)
-                            for i in range(num_hashes)]))
-    sig = F.aggregate(
-        per_shingle,
-        F.array_repeat(F.lit(9223372036854775807).cast("long"),
-                       num_hashes),
-        lambda acc, x: F.zip_with(acc, x, lambda p, q: F.least(p, q)))
-    return (staged.withColumn(out_col, sig)
-                  .drop("_mhl_norm", "_mhl_shs"))
+            f"input column {out_col!r} collides with "
+            "with_minhash_signature_local's output")
+    sig = minhash_signature_udf(num_hashes, w)
+    return df.withColumn(out_col, sig(normalized_text(F.col(text_col))))
 
 
 def shingle_col(text: Column, w: int = 3) -> Column:
@@ -232,15 +250,10 @@ def minhash_signatures(df: DataFrame, text_col: str = "text",
                        num_hashes: int = 64) -> DataFrame:
     """(id, _sig array<long>) — k-permutation MinHash signatures.
 
-    r9: delegates to the doc-local fold
-    (:func:`with_minhash_signature_local` — one materialized-array
-    traversal behind the Arrow shingle boundary, no explode, no
-    shuffle), measured 1.8x faster than the explode+groupBy form at
-    sf1.0 and bit-identical to it by the standing streaming pin
-    (tests/test_streaming_near_dedup.py::test_local_signature_bit_identity,
-    which now compares against the retained
-    :func:`minhash_signatures_agg` so the two-engine check stays
-    non-vacuous)."""
+    Delegates to :func:`with_minhash_signature_local`: one map-side
+    Arrow kernel per row (no explode, no shuffle), bit-identical to the
+    retained explode+groupBy engine :func:`minhash_signatures_agg`
+    (tests/test_streaming_near_dedup.py::test_local_signature_bit_identity)."""
     return (with_minhash_signature_local(
                 df.select(F.col(id_col), F.col(text_col)),
                 text_col=text_col, num_hashes=num_hashes, out_col="_sig")
@@ -310,8 +323,8 @@ def minhash_lsh_candidates(df: DataFrame, text_col: str = "text",
 
     rows_per_band = num_hashes // bands; two docs are candidates if any
     band matches exactly. Returns (id_a, id_b, n_bands_matched).
-    Shuffles: the signature agg + the band self-join — at corpus scale
-    each band bucket is tiny unless docs are true near-dups.
+    Shuffles: the band self-join only (signatures are doc-local) — at
+    corpus scale each band bucket is tiny unless docs are true near-dups.
 
     ``max_bucket`` (r7 review): exact_rep_rows collapses byte-IDENTICAL
     texts, but an m-copy group of NEAR-identical texts (boilerplate
@@ -331,8 +344,8 @@ def minhash_lsh_candidates(df: DataFrame, text_col: str = "text",
     sig = minhash_signatures(df, text_col, id_col, num_hashes)
     bands_col = band_structs("_sig", num_hashes, bands)
     # eager localCheckpoint (r9): the self-join (and the max_bucket
-    # window) consumes the band rows on BOTH sides, and since the
-    # doc-local signature fold there is no exchange below for Spark to
+    # window) consumes the band rows on BOTH sides, and the doc-local
+    # signature kernel leaves no exchange below for Spark to
     # reuse — without this the whole shingle+signature subtree executed
     # once per consumer. ~bands rows/doc of (id, int, long); freed by
     # the ContextCleaner when the result is GC'd.
@@ -677,10 +690,12 @@ def cluster_pairs(pairs: DataFrame, nodes: DataFrame, *,
     improved — label(v) converges to min(component) in O(diameter)
     rounds, and near-dup components are shallow (stars around a popular
     template; diameter rarely exceeds 3-4). The driver loop with one
-    convergence count per round is the legitimate iterative-algorithm
-    shape (GraphX connected components does the same barrier); each
-    round is two key shuffles, and ``localCheckpoint`` truncates the
-    growing lineage so round N's plan does not replay rounds 1..N-1.
+    convergence barrier per round is the legitimate iterative-algorithm
+    shape (GraphX connected components does the same); each round is
+    two key shuffles, and ``localCheckpoint`` truncates the growing
+    lineage so round N's plan does not replay rounds 1..N-1. The
+    round's count of lowered labels is an ``Observation`` on that
+    eager checkpoint, so convergence costs no extra Spark job.
     Raises if max_iter rounds pass without convergence (pathological
     chain-shaped graphs; raise max_iter for those).
 
@@ -689,6 +704,8 @@ def cluster_pairs(pairs: DataFrame, nodes: DataFrame, *,
     eager edge/label materialization below (``checked_long``,
     VERDICT r6 #4) instead of an opaque mid-chain ANSI cast error.
     """
+    from pyspark.sql.observation import Observation
+
     from documentai_spark.functions.ids import checked_long
 
     def _src_dst(a: str, b: str) -> DataFrame:
@@ -707,7 +724,6 @@ def cluster_pairs(pairs: DataFrame, nodes: DataFrame, *,
               .distinct()
               .withColumn("label", F.col("node"))
               .localCheckpoint(eager=True))
-    prev_cp = labels  # the round's eagerly-checkpointed label table
     for round_no in range(1, max_iter + 1):
         nbr_min = (edges
                    .join(labels.select(F.col("node").alias("dst"),
@@ -715,6 +731,7 @@ def cluster_pairs(pairs: DataFrame, nodes: DataFrame, *,
                          "dst")
                    .groupBy("src")
                    .agg(F.min("dlab").alias("cand")))
+        lowered = Observation()
         new = (labels.join(nbr_min,
                            labels["node"] == nbr_min["src"], "left")
                .select("node",
@@ -724,16 +741,16 @@ def cluster_pairs(pairs: DataFrame, nodes: DataFrame, *,
                        .alias("label"),
                        (F.col("cand") < F.col("label"))
                        .alias("_lowered"))
+               .observe(lowered, F.count_if("_lowered").alias("n"))
+               .drop("_lowered")
                .localCheckpoint(eager=True))
         # `new` is eagerly materialized, so the PRIOR round's checkpoint
         # blocks are unreachable from any live plan — free them now or
         # executor storage holds one label-table copy per round, up to
         # max_iter copies on chain-shaped components (ADVICE r5)
-        _free_local_checkpoint(prev_cp)
-        prev_cp = new
-        changed = new.filter(F.col("_lowered")).limit(1).count()
-        labels = new.drop("_lowered")
-        if changed == 0:
+        _free_local_checkpoint(labels)
+        labels = new
+        if lowered.get["n"] == 0:
             # the result depends only on the final label table
             _free_local_checkpoint(edges)
             if stats is not None:

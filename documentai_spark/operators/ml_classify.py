@@ -49,6 +49,7 @@ from __future__ import annotations
 
 import json
 import os
+import warnings
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -401,21 +402,22 @@ def predict_with_topk(model: FrozenTextClassifier, df: DataFrame,
                       id_col: str | None = None) -> DataFrame:
     """Adds ml_category + ml_confidence + ml_topk (W3 top-k classes).
 
-    Explode terms -> broadcast-join the compiled weights -> per-(doc,
-    term) tf counts -> frozen sublinear LUT factor -> integer groupBy
-    sums: the whole scorer is JVM columnar, shuffles only the distinct
-    (row, vocab-term, tf) hits (tf completes map-side), and is exact
-    under any aggregation order — the shipped decision function applies
-    the SAME sublinear-tf feature the trainer fitted. Scores into a
-    fresh internal handle column — the input is never renamed, so a
-    caller-side 'text' column cannot collide (ADVICE r2).
+    Per-row integer class sums from the Arrow scorer
+    (:func:`_score_sums_udf` over the JVM-lowercased text: terms, tf,
+    the frozen sublinear LUT factor — the SAME feature the trainer
+    fitted — and the integer weights), then the intercepts, ranking
+    and max-subtracted softmax as JVM expressions. No explode, no
+    join, no shuffle; the input is never renamed, so a caller-side
+    'text' column cannot collide (ADVICE r2).
 
-    ``id_col``: kept for API compatibility; scoring is per-row since r9
-    (the Arrow scorer computes every row's sums in place — see
-    :func:`_score_sums_udf`), so there is no score join, no
-    ``monotonically_increasing_id`` fallback and no localCheckpoint pin
-    — the historical no-id_col storage hazard is gone.
+    ``id_col`` is deprecated and ignored: scoring has been per-row
+    since r9, so there is no score join to key. Passing it warns
+    (DeprecationWarning).
     """
+    if id_col is not None:
+        warnings.warn("predict_with_topk: id_col is ignored (scoring is "
+                      "per-row) and will be removed",
+                      DeprecationWarning, stacklevel=2)
     kcls = len(model.labels)
     reserved = {f"_s{c}" for c in range(kcls)} | {"_ranked", "_denom",
                                                  "_sums"}
@@ -490,8 +492,8 @@ def classify_with_ml_vote(df: DataFrame, cfg, model: FrozenTextClassifier,
     """The full 4-technique ensemble: 3 rule techniques + the frozen ML
     model as the 4th vote with k/4 confidence (documentClassifier.py:
     898-948 — 'Add ML classifier as 4th technique' + 4/4 final
-    classification). Everything stays JVM columnar. Pass the input's
-    unique ``id_col`` when there is one (see predict_with_topk)."""
+    classification). ``id_col`` is deprecated and ignored, as in
+    :func:`predict_with_topk` (which warns when it is passed)."""
     from documentai_spark.operators.classify import classify_with_vote
     scored = predict_with_topk(model, df, text_col=text_col, id_col=id_col)
     return classify_with_vote(scored, cfg, text_col=text_col,

@@ -4,10 +4,10 @@
 Batch ``near_dedup`` is three GLOBAL passes — LSH candidate pairs, a
 true shingle-Jaccard verify join, and an iterative cluster closure —
 none of which a stream can replay per micro-batch. The streaming form
-keeps the exact candidate GEOMETRY (identical pandas-UDF shingles ->
-identical salted-xxhash64 MinHash signatures -> identical banded bucket
-keys, bit-for-bit: tests/test_streaming_near_dedup pins both against
-``minhash_signatures`` / ``band_structs``) and replaces the two global
+keeps the exact candidate GEOMETRY (the batch MinHash kernel's
+signatures -> identical banded bucket keys, bit-for-bit:
+tests/test_streaming_near_dedup pins both against
+``minhash_signatures_agg`` / ``band_structs``) and replaces the two global
 passes with bounded keyed state:
 
 - **verify** — the true-Jaccard join becomes the unbiased MinHash
@@ -159,14 +159,13 @@ def streaming_near_dup_verdicts(stream: DataFrame, *,
            .withColumn("_id",
                        checked_long(F.col(id_col), "streaming_near_dup",
                                     stream.schema[id_col].dataType)))
-    # barrier before the band explode: the signature is an EXPRESSION
-    # (the aggregate/zip_with fold over the UDF's shingle column), and
-    # projection collapse would re-inline it into every post-Generate
-    # reference — recomputing the 64-hash fold once per band row (16x
-    # per doc). A nondeterministic always-true filter pins `_sig` as a
-    # materialized attribute (the optimizer can neither collapse
-    # projections across it nor push it down) — the same trick
-    # streaming/pipeline.py uses for the UnsafeRow boundary.
+    # barrier before the band explode: `_sig` feeds every band struct
+    # and the per-band-row projection, and projection collapse may
+    # re-inline its producer into each post-Generate reference. A
+    # nondeterministic always-true filter pins `_sig` as a materialized
+    # attribute (the optimizer can neither collapse projections across
+    # it nor push it down) — the same trick streaming/pipeline.py uses
+    # for the UnsafeRow boundary.
     sig = sig.filter(F.spark_partition_id() >= 0)
     ex = (sig.select(
               "_id", "_sig",

@@ -394,7 +394,8 @@ def test_rep_signals_udf_matches_expr(spark):
     (integer counters AND the JVM-rounded ratios) on adversarial docs:
     nulls, control-char whitespace (\\x1c splits ml tokens but not
     token_count's class), tab-led lines (JVM trim strips only spaces),
-    unicode/astral char counting, and heavy duplication."""
+    unicode/astral char counting, heavy duplication, and mixed case
+    (bigrams count over the lowercased text, lines over the raw)."""
     from documentai_spark.operators.curation import (
         repetition_signals, repetition_signals_expr,
     )
@@ -408,6 +409,8 @@ def test_rep_signals_udf_matches_expr(spark):
         (7, "é line\né line\n\U0001d11e astral chars here"),
         (8, ("loop " * 300).strip()),
         (9, "one"),                              # <2 tokens, no bigram
+        (10, "Ha ha Ha ha Ha ha"),               # bigrams are lowercased
+        (11, "The cat THE CAT the Cat"),
     ], "doc_id long, text string")
     fast = {r.doc_id: r.asDict()
             for r in repetition_signals(docs).collect()}
@@ -592,8 +595,9 @@ def test_null_ids_fail_fast_on_hash_decision_surfaces(spark):
 
 def test_minhash_local_signature_collision_guard(spark):
     """with_minhash_signature_local promises to keep every input
-    column; a pre-existing _mhl_*/out_col column would be clobbered
-    then dropped — refused loudly (r7 review)."""
+    column; a pre-existing out_col column would be clobbered — refused
+    loudly (r7 review). It stages no internal columns, so any other
+    input name, such as _mhl_shs, passes through untouched."""
     import pytest
 
     from documentai_spark.operators.dedup import (
@@ -602,8 +606,8 @@ def test_minhash_local_signature_collision_guard(spark):
 
     df = spark.createDataFrame([(1, "a b c", 9)],
                                "doc_id long, text string, _mhl_shs int")
-    with pytest.raises(ValueError, match="_mhl_shs"):
-        with_minhash_signature_local(df)
+    row = with_minhash_signature_local(df).first()
+    assert row["_mhl_shs"] == 9 and len(row["_sig"]) == 64
     df2 = spark.createDataFrame([(1, "a b c", 9)],
                                 "doc_id long, text string, _sig int")
     with pytest.raises(ValueError, match="_sig"):

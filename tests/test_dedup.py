@@ -111,11 +111,65 @@ def test_simhash(docs):
 
 
 def test_signatures_partition_invariant(docs):
+    from documentai_spark.operators.dedup import minhash_signatures
+
     one = {r.doc_id: r.simhash
            for r in simhash_signatures(docs.repartition(1)).collect()}
     many = {r.doc_id: r.simhash
             for r in simhash_signatures(docs.repartition(7)).collect()}
     assert one == many
+    one = {r.doc_id: r._sig
+           for r in minhash_signatures(docs.repartition(1)).collect()}
+    many = {r.doc_id: r._sig
+            for r in minhash_signatures(docs.repartition(7)).collect()}
+    assert one == many
+
+
+def test_xxhash64_port_matches_spark(spark):
+    """core.minhash's numpy XXH64 equals ``F.xxhash64(F.lit(i), s)``
+    bit for bit on every byte length 0-80 (each stripe/word/int/tail
+    path and their joins) over ASCII, multibyte UTF-8, astral and
+    control-character text."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from documentai_spark.core.minhash import (
+        _hash_strings, permutation_seeds,
+    )
+
+    alphabet = ["a", "Z", " ", "\t", "\x0b", "\x1c", "\x1d", "ß", "İ",
+                "ſ", "Σ", "ς", "é", "\U0001d11e"]
+    rng = np.random.default_rng(7)
+    strs = ["x" * n for n in range(81)]
+    while len(strs) < 200:
+        s = "".join(rng.choice(alphabet, int(rng.integers(0, 40))))
+        if len(s.encode()) <= 80:
+            strs.append(s)
+    k = 8
+    df = spark.createDataFrame(list(enumerate(strs)), "i long, s string")
+    want = {r.i: list(r.h) for r in df.select(
+        "i", F.array(*[F.xxhash64(F.lit(j), "s") for j in range(k)])
+        .alias("h")).collect()}
+    got = _hash_strings([s.encode() for s in strs],
+                        permutation_seeds(k)).view(np.int64)
+    for i, s in enumerate(strs):
+        assert list(got[i]) == want[i], repr(s)
+
+
+def test_exact_rep_rows_keeps_full_width(spark):
+    """The rep exchange has an explicit count, so AQE (on in the test
+    session) cannot coalesce a tiny input to one partition: every
+    consumer of the representatives runs spark.sql.shuffle.partitions
+    wide."""
+    from documentai_spark.operators.dedup import exact_rep_rows
+
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    df = spark.createDataFrame([(i, f"doc {i % 30} text") for i in
+                                range(40)], "doc_id long, text string")
+    reps = exact_rep_rows(df)
+    assert reps.rdd.getNumPartitions() == n
+    assert reps.count() == 30
 
 
 def test_simhash_udf_matches_expr(spark, docs):

@@ -132,7 +132,7 @@ def test_sublinear_scorer_matches_float_model(model_and_data, spark):
            for r in test.collect()]
     rep_df = spark.createDataFrame(rep, ["doc_id", "text"])
     got = {r.doc_id: (r.ml_category, r.ml_confidence)
-           for r in predict_with_topk(model, rep_df, id_col="doc_id")
+           for r in predict_with_topk(model, rep_df)
            .collect()}
 
     checked = 0
@@ -171,7 +171,7 @@ def test_tf_saturates_at_cap(model_and_data, spark):
         [(0, " ".join([term] * 100)), (1, " ".join([term] * 1000))],
         ["doc_id", "text"])
     rows = {r.doc_id: (r.ml_category, r.ml_confidence)
-            for r in predict_with_topk(model, df, id_col="doc_id")
+            for r in predict_with_topk(model, df)
             .collect()}
     assert rows[0] == rows[1]
 
@@ -197,6 +197,20 @@ def test_no_id_scoring_is_rowwise(model_and_data):
     assert len(cats) == 2 * test.count()
 
 
+def test_id_col_is_deprecated(model_and_data):
+    """id_col is ignored since scoring went per-row; passing it warns
+    and changes nothing in the output, leaving it out stays silent."""
+    import warnings
+
+    model, test = model_and_data
+    with pytest.warns(DeprecationWarning, match="id_col is ignored"):
+        with_id = predict_with_topk(model, test, id_col="doc_id")
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", DeprecationWarning)
+        plain = predict_with_topk(model, test)
+    assert with_id.columns == plain.columns
+
+
 def test_18class_fidelity_benchmark(spark):
     """The reference's model benchmark shape: 18 classes, ~560 samples
     (model/model_info.json, CV accuracy 0.9212). The parity trainer on a
@@ -211,7 +225,7 @@ def test_18class_fidelity_benchmark(spark):
     test = data.filter(F.col("doc_id") % 5 == 0)
     model = train_classifier(train)
     assert len(model.labels) == 18
-    pred = predict_with_topk(model, test, id_col="doc_id")
+    pred = predict_with_topk(model, test)
     acc = pred.select(
         F.avg((F.col("ml_category") == F.col("label_str")).cast("double"))
          .alias("acc")).collect()[0].acc
@@ -343,7 +357,7 @@ def test_softmax_no_overflow_on_extreme_scores(spark):
     # score far past the exp() overflow point of the unshifted form
     mega = " ".join(["invoice payment amount due total"] * 4000)
     df = spark.createDataFrame([(1, mega)], ["doc_id", "text"])
-    row = predict_with_topk(model, df, id_col="doc_id").first()
+    row = predict_with_topk(model, df).first()
     assert math.isfinite(row.ml_confidence) and 0.0 < row.ml_confidence <= 1.0
     assert all(math.isfinite(x.p) for x in row.ml_topk)
     assert row.ml_topk[0].p == row.ml_confidence
