@@ -919,9 +919,10 @@ def q_near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     components with min-id representatives — the transitive step every
     pair-emitting dedup needs before a keep set exists (A~B, B~C must
     fold into ONE cluster even when A!~C). The distributed side runs
-    iterative min-label propagation; the oracle closes the SAME pair
-    set with a recursive CTE — two different fixpoint strategies
-    agreeing value-for-value."""
+    one union-find pass over the edges (``core.components``, in a
+    single mapInArrow task); the oracle closes the SAME pair set with a
+    recursive CTE fixpoint — two different strategies agreeing
+    value-for-value."""
     from documentai_spark.operators.dedup import cluster_pairs
     docs = _par(spark, _t(spark, sf_dir, "documents")).filter(F.col("doc_id") < 120)
     pairs = q_ngram_jaccard(spark, sf_dir) \

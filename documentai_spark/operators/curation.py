@@ -77,7 +77,6 @@ def with_curation_flags(df: DataFrame, *, id_col: str = "doc_id",
                         near_reps: DataFrame | None = None,
                         jaccard_threshold: float = 0.8,
                         num_hashes: int = 64, bands: int = 16,
-                        max_iter: int = 50,
                         max_bucket: int | None = 4096,
                         near_stats: dict | None = None) -> DataFrame:
     """Adds keep / is_dup / bad_lang / bad_len / low_conf.
@@ -91,7 +90,9 @@ def with_curation_flags(df: DataFrame, *, id_col: str = "doc_id",
     representatives only (``dedup.exact_rep_rows``, r7: identical texts
     band identically, so banding members too was quadratic in the
     group size) -> shingle-Jaccard verify -> transitive cluster closure
-    (``dedup.near_dedup``'s stages) — and
+    (``dedup.near_dedup``'s stages; the closure is one lazy union-find
+    pass, ``dedup.cluster_pairs``, so building the frame runs no Spark
+    job for it) — and
     adds ``is_near_dup``: the row is NOT its cluster's min-id
     representative *and* is not already an exact duplicate, so drop
     accounting attributes near-dup kills separately from exact ones.
@@ -111,6 +112,9 @@ def with_curation_flags(df: DataFrame, *, id_col: str = "doc_id",
     ``near_dedup=True`` by construction (the same join, the same
     long-domain exact-dup winner). Mutually exclusive with
     ``near_dedup=True``.
+
+    ``near_stats``: a dict the closure fills with ``rounds`` = 1 (one
+    pass over the verified edges) when ``near_dedup=True``.
     """
     if near_dedup and near_reps is not None:
         raise ValueError("pass near_dedup=True OR near_reps, not both")
@@ -184,7 +188,7 @@ def with_curation_flags(df: DataFrame, *, id_col: str = "doc_id",
             reps = cluster_pairs(pairs, rep_src.select(id_col),
                                  a_col="id_a",
                                  b_col="id_b", id_col=id_col,
-                                 max_iter=max_iter, stats=near_stats)
+                                 stats=near_stats)
         else:
             reps = near_reps.select(id_col, "cluster_rep")
         # checked here TOO (r7 review): relying on dup_id's assert

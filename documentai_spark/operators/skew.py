@@ -10,9 +10,10 @@ reference's analog is fixed-size page batching
   conversation over S salt buckets so no single task owns a whole
   transcript (SURVEY §4 X8 — AQE skew handling does not apply to
   groupBy-free UDF stages, so this is explicit).
-- **order restoration window** for any per-conversation logic:
-  ``Window.partitionBy(conv_id).orderBy(turn_idx)`` (W1 — the reference's
-  in-submission-order collect, universal_analyzer.py:57-64).
+- **order restoration** for output and per-conversation logic:
+  ``restore_order``'s range exchange + per-task sort on
+  ``(conv_id, turn_idx)`` (W1 — the reference's in-submission-order
+  collect, universal_analyzer.py:57-64).
 
 At 100 TB the per-turn UDF stages dominate; they need no co-location, so
 salting costs one shuffle and buys uniform task sizing. Ordering is only
@@ -22,7 +23,7 @@ sessionization), not after every stage.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, WindowSpec
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -49,12 +50,6 @@ def salted_repartition(df: DataFrame, num_partitions: int | None = None,
     else:
         out = df.repartition(F.col(conv_col), F.col("_salt"))
     return out.drop("_salt")
-
-
-def conversation_window(conv_col: str = "conv_id",
-                        order_col: str = "turn_idx") -> WindowSpec:
-    """The W1 stable-ordering window."""
-    return Window.partitionBy(conv_col).orderBy(order_col)
 
 
 def restore_order(df: DataFrame, conv_col: str = "conv_id",

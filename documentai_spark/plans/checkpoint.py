@@ -409,7 +409,7 @@ def _near_reps_stage(spark: SparkSession, in_path: str, out_path: str,
     # the bucket-manifest guard agree on what "same" means
     config = {k: eff[k] for k in ("id_col", "text_col", "num_hashes",
                                   "bands", "jaccard_threshold",
-                                  "max_iter", "max_bucket")}
+                                  "max_bucket")}
     prior = read_stage_manifest(out_path, NEAR_REPS_STAGE)
     if prior and prior.get("status") == "done":
         if prior.get("config") != config:
@@ -438,8 +438,7 @@ def _near_reps_stage(spark: SparkSession, in_path: str, out_path: str,
         jaccard_threshold=eff["jaccard_threshold"],
         max_bucket=eff["max_bucket"])
     reps = cluster_pairs(pairs, rep_src.select(id_col), a_col="id_a",
-                         b_col="id_b", id_col=id_col,
-                         max_iter=eff["max_iter"])
+                         b_col="id_b", id_col=id_col)
     obs = Observation("near_reps")
     (reps.observe(obs, F.count(F.lit(1)).alias("n"))
          .write.mode("overwrite").parquet(reps_dir))

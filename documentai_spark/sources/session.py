@@ -3,8 +3,26 @@
 from __future__ import annotations
 
 import os
+import warnings
+from collections.abc import Mapping
 
 from pyspark.sql import SparkSession
+
+_SPLIT_ENV = "SPARK_GRAFT_MAX_PARTITION_BYTES"
+
+
+def split_default_warning(master: str,
+                          env: Mapping[str, str]) -> str | None:
+    """The warning a session on ``master`` should log about the 16 MB
+    input-split default, or None. The default suits the local testdata
+    (few big row groups per file); on a cluster of many multi-block
+    files it multiplies scan tasks, so a non-local master without an
+    explicit ``SPARK_GRAFT_MAX_PARTITION_BYTES`` is warned."""
+    if master == "local" or master.startswith("local[") or _SPLIT_ENV in env:
+        return None
+    return (f"master {master!r} is not local and {_SPLIT_ENV} is unset: "
+            "input splits default to 16 MB, sized for local single-file "
+            "inputs; on a cluster set it to 128 MB - 1 GB")
 
 
 def build_session(app_name: str = "documentai_spark",
@@ -54,14 +72,18 @@ def build_session(app_name: str = "documentai_spark",
          # cluster with many multi-block files, set the env to 128 MB -
          # 1 GB (guide §6) — the knob is deployment config, not code.
          .config("spark.sql.files.maxPartitionBytes",
-                 os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES",
-                                "16777216"))
+                 os.environ.get(_SPLIT_ENV, "16777216"))
          .config("spark.driver.memory",
                  os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
          .config("spark.sql.session.timeZone", "UTC"))
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
-    return b.getOrCreate()
+    spark = b.getOrCreate()
+    # the master is only known here when spark-submit chose it
+    msg = split_default_warning(spark.sparkContext.master, os.environ)
+    if msg:
+        warnings.warn(msg, stacklevel=2)
+    return spark
 
 
 def warm_workers(spark: SparkSession, cpus: int) -> None:

@@ -216,6 +216,20 @@ def test_driver_heap_guard():
         check_driver_heap(8 << 30)  # no warning at 8 GiB
 
 
+def test_split_default_warns_off_local_only():
+    """The 16 MB input-split default is sized for local single-file
+    inputs: a non-local master warns unless the split env is set, and
+    local masters never warn."""
+    from documentai_spark.sources.session import split_default_warning
+
+    env = "SPARK_GRAFT_MAX_PARTITION_BYTES"
+    for master in ("local", "local[4]", "local[*]"):
+        assert split_default_warning(master, {}) is None
+    for master in ("yarn", "spark://host:7077", "local-cluster[2,1,1024]"):
+        assert env in split_default_warning(master, {})
+        assert split_default_warning(master, {env: "134217728"}) is None
+
+
 def test_auto_shards_sizing():
     """VERDICT r6 #5: --prepare stage 2 self-sizes the packing shard
     count from the OBSERVED corpus rows instead of relying on the

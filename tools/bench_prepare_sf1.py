@@ -16,8 +16,8 @@ recording:
 
 - wall seconds per scale and the 60x-data wall ratio;
 - rows / kept / near_dup accounting (Observation, rides the write);
-- the cluster closure's ROUND count (min-label propagation rounds ==
-  component diameter + 1 — flat at scale unless chains appear);
+- the cluster closure's pass count (``cluster_pairs`` stats: 1, one
+  union-find pass over the edges at any scale);
 - total and peak per-stage shuffle write bytes (Spark REST API stage
   metrics) — the number that predicts network cost on a real cluster.
 
@@ -164,7 +164,7 @@ def main() -> None:
                 "write), tools/bench_prepare_sf1.py; shuffle bytes from "
                 "the Spark REST stage metrics.\n\n")
         f.write("| scale | docs | wall s | kept | near_dup | closure "
-                "rounds | stages | shuffle total MB | peak stage MB |\n")
+                "passes | stages | shuffle total MB | peak stage MB |\n")
         f.write("|---|---|---|---|---|---|---|---|---|\n")
         for label, r in (("sf0.1", small), (f"{copies}x sf0.1", large)):
             f.write(f"| {label} | {r['rows']:,} | {r['wall_sec']} | "
@@ -178,10 +178,10 @@ def main() -> None:
                 "per-copy internal structure x"
                 f"{copies} plus cross-copy clusters (up to {copies} "
                 "members) on long documents where the fixed "
-                "perturbation is proportionally small; closure rounds "
+                "perturbation is proportionally small; closure passes "
                 f"{small['closure_rounds']} -> "
-                f"{large['closure_rounds']} (star-shaped components, "
-                "no chains).\n")
+                f"{large['closure_rounds']} (one union-find pass over "
+                "the edges).\n")
     print(f"appended -> {OUT_MD}; wall ratio {ratio:.1f}x")
     spark.stop()
 
