@@ -1332,7 +1332,7 @@ def q_stream_band_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     staged = docs.select("doc_id", sig.alias("_sig")) \
                  .localCheckpoint(eager=True)
     return (staged.select("doc_id",
-                          F.explode(band_structs(F.col("_sig"), 64, 16))
+                          F.explode(band_structs("_sig", 64, 16))
                           .alias("_b"))
                   .select("doc_id",
                           F.col("_b.band_idx").alias("band_idx"),

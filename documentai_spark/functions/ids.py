@@ -18,15 +18,17 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from documentai_spark.functions import sqltext
+
 _FIX = (" — these surfaces label rows in the long domain; use a "
         "numeric id column, or derive a long surrogate first "
         "(functions.ids.with_surrogate_id — collision-checked "
         "xxhash64 — or a dictionary join)")
 
 
-def checked_long(col: Column, context: str, dtype=None) -> Column:
-    """``col`` cast to long, failing fast with a named error when any
-    value is NULL, malformed, or would truncate.
+def checked_long(name: str, context: str, dtype=None) -> Column:
+    """Column ``name`` cast to long, failing fast with a named error when
+    any value is NULL, malformed, or would truncate.
 
     ``try_cast`` turns ANSI's throw into NULL so the ``assert_true``
     message (which names ``context``, the offending value, and the fix)
@@ -37,31 +39,36 @@ def checked_long(col: Column, context: str, dtype=None) -> Column:
     extra jobs — the check is an expression riding whichever pass
     needed the cast.
 
-    ``dtype`` (pass ``df.schema[id_col].dataType``): when the id column
+    ``dtype`` (pass ``df.schema[name].dataType``): when the id column
     is a STRING, the value must additionally be the CANONICAL long form
     (r7 review) — '007' and '7' both cast to 7, so two DISTINCT string
     ids would silently share one closure label / shard key and one
     document would inherit the other's dedup verdict. The canonical
     check (string equals its own long's string image) rejects padded,
     signed-plus, or whitespace forms with an error naming the fix.
+
+    Built from SQL text in one ``F.expr`` (the builder form cost ~160
+    py4j round trips per call); build it once per operator and reuse
+    the returned column.
     """
     from pyspark.sql.types import StringType
 
-    lng = col.try_cast("long")
-    ok = (col.isNotNull() & lng.isNotNull()
-          & col.try_cast("double").eqNullSafe(lng.cast("double")))
+    c = sqltext.ident(name)
+    lng = f"try_cast({c} AS BIGINT)"
+    ok = (f"((({c} IS NOT NULL) AND ({lng} IS NOT NULL)) AND "
+          f"(try_cast({c} AS DOUBLE) <=> CAST({lng} AS DOUBLE)))")
     why = " is not losslessly long-castable"
     if isinstance(dtype, StringType):
-        ok = ok & col.eqNullSafe(lng.cast("string"))
+        ok = f"({ok} AND ({c} <=> CAST({lng} AS STRING)))"
         why = (" is not a canonical long-formatted id (distinct string "
                "ids that collapse onto one long, e.g. '007' and '7', "
                "would be conflated onto one label)")
-    msg = F.concat(
-        F.lit(f"{context}: id value "),
-        F.coalesce(F.concat(F.lit("'"), col.cast("string"), F.lit("'")),
-                   F.lit("NULL")),
-        F.lit(why + _FIX))
-    return F.when(F.assert_true(ok, msg).isNull(), lng)
+    q = sqltext.string("'")
+    msg = (f"concat({sqltext.string(f'{context}: id value ')}, "
+           f"coalesce(concat({q}, CAST({c} AS STRING), {q}), 'NULL'), "
+           f"{sqltext.string(why + _FIX)})")
+    return F.expr(f"CASE WHEN (assert_true({ok}, {msg}) IS NULL) "
+                  f"THEN {lng} END")
 
 
 def checked_non_null(col: Column, context: str) -> Column:

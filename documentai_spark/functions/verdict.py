@@ -22,7 +22,7 @@ docstring used to describe the retired /10 no-skew r2 formula).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from documentai_spark.core.quality import (
@@ -30,6 +30,7 @@ from documentai_spark.core.quality import (
     CRITICAL_LOW, METRIC_THRESHOLDS, RECOMMENDATION_TEXT, REVERSE_METRICS,
     VERDICT_AZURE, VERDICT_DIRECT, VERDICT_PREPROCESS, _METRIC_ORDER,
 )
+from documentai_spark.functions import sqltext
 
 _METRIC_COL = {"legibility": "q_legibility", "completeness":
                "q_completeness", "skew": "q_skew", "noise": "q_noise",
@@ -38,95 +39,100 @@ _METRIC_COL = {"legibility": "q_legibility", "completeness":
                "shadow_glare": "q_shadow_glare",
                "resolution": "q_resolution"}
 
+# The four columns are SQL text generated once at import (pure strings,
+# parsed by one F.expr each per plan): built node by node through F.*
+# they cost ~2,000 py4j round trips per plan. Every binary operation is
+# parenthesized in the oracle's evaluation order and every double is a
+# <repr>D literal, so the parsed trees — and the IEEE results — are the
+# ones the builder form made.
+_d = sqltext.double
+_BLANK_HARD = f"(`q_blank` >= {_d(BLANK_LOW)})"
 
-def confidence_col(q_legibility: Column, q_completeness: Column,
-                   q_skew: Column, q_noise: Column, q_contrast: Column,
-                   q_brightness: Column,
-                   q_blank: Column | None = None) -> Column:
+
+def _confidence_sql() -> str:
     """Weighted mean with the critical flat-return
     (quality_config.py:39-74 analog; the reference's full 12-point scheme:
     legibility 3, completeness 3, skew 2 reversed, noise 2 reversed,
-    contrast 1, brightness 1). When ``q_blank`` is given, the blank hard
-    block zeroes confidence alongside the 're-scan' verdict —
+    contrast 1, brightness 1), summed left to right then divided. The
+    blank hard block zeroes confidence alongside the 're-scan' verdict —
     verdict_for_page returns (re-scan, 0.0) (quality_config.py:109-121)."""
-    conf = (q_legibility * F.lit(3.0) + q_completeness * F.lit(3.0)
-            + (F.lit(1.0) - q_skew) * F.lit(2.0)
-            + (F.lit(1.0) - q_noise) * F.lit(2.0)
-            + q_contrast * F.lit(1.0) + q_brightness * F.lit(1.0)) \
-        / F.lit(CONFIDENCE_W_TOTAL)
-    critical_low = (q_legibility < F.lit(CRITICAL_LOW)) \
-        | ((F.lit(1.0) - q_skew) < F.lit(CRITICAL_LOW)) \
-        | ((F.lit(1.0) - q_noise) < F.lit(CRITICAL_LOW))
-    out = F.when(critical_low, F.lit(CRITICAL_CAP)).otherwise(conf)
-    if q_blank is not None:
-        out = F.when(q_blank >= F.lit(BLANK_LOW), F.lit(0.0)).otherwise(out)
-    return out
+    terms = [f"(`q_legibility` * {_d(3.0)})",
+             f"(`q_completeness` * {_d(3.0)})",
+             f"(({_d(1.0)} - `q_skew`) * {_d(2.0)})",
+             f"(({_d(1.0)} - `q_noise`) * {_d(2.0)})",
+             f"(`q_contrast` * {_d(1.0)})",
+             f"(`q_brightness` * {_d(1.0)})"]
+    acc = terms[0]
+    for t in terms[1:]:
+        acc = f"({acc} + {t})"
+    conf = f"({acc} / {_d(CONFIDENCE_W_TOTAL)})"
+    low = _d(CRITICAL_LOW)
+    critical_low = (f"(((`q_legibility` < {low}) OR "
+                    f"(({_d(1.0)} - `q_skew`) < {low})) OR "
+                    f"(({_d(1.0)} - `q_noise`) < {low}))")
+    return (f"CASE WHEN {_BLANK_HARD} THEN {_d(0.0)} ELSE "
+            f"CASE WHEN {critical_low} THEN {_d(CRITICAL_CAP)} "
+            f"ELSE {conf} END END")
 
 
-def verdict_col(q_blank: Column, confidence: Column) -> Column:
+def _verdict_sql() -> str:
     """4-way verdict + blank hard blocker (quality_config.py:86-129).
-
     The blank "low" branch short-circuits before the confidence logic —
-    the X3 hard-blocker early exit, free under Catalyst ``when`` ordering.
-    """
-    return (F.when(q_blank >= F.lit(BLANK_LOW), F.lit("re-scan"))
-             .when(confidence >= F.lit(VERDICT_DIRECT), F.lit("direct analysis"))
-             .when(confidence >= F.lit(VERDICT_PREPROCESS), F.lit("pre-processing"))
-             .when(confidence >= F.lit(VERDICT_AZURE),
-                   F.lit("azure document analysis"))
-             .otherwise(F.lit("reupload")))
+    the X3 hard-blocker early exit, free under CASE ordering."""
+    s = sqltext.string
+    return (f"CASE WHEN {_BLANK_HARD} THEN {s('re-scan')} "
+            f"WHEN (`confidence` >= {_d(VERDICT_DIRECT)}) "
+            f"THEN {s('direct analysis')} "
+            f"WHEN (`confidence` >= {_d(VERDICT_PREPROCESS)}) "
+            f"THEN {s('pre-processing')} "
+            f"WHEN (`confidence` >= {_d(VERDICT_AZURE)}) "
+            f"THEN {s('azure document analysis')} "
+            f"ELSE {s('reupload')} END")
 
 
-def needs_preprocessing_col(verdict: Column) -> Column:
-    """P4 preprocessing-need predicate (api-gateway/app.py:132-219 analog)."""
-    return verdict.isin("pre-processing", "azure document analysis")
-
-
-def _category_col(metric: str, value: Column) -> Column:
-    """excellent/good/medium/low when-chain per the threshold table; the
-    reverse metric (noise) is categorized on 1-value
-    (core/quality.metric_category; quality_config.py:17-27)."""
-    v = (F.lit(1.0) - value) if metric in REVERSE_METRICS else value
-    exc, good, med = METRIC_THRESHOLDS[metric]
-    return (F.when(v >= F.lit(exc), "excellent")
-             .when(v >= F.lit(good), "good")
-             .when(v >= F.lit(med), "medium")
-             .otherwise("low"))
-
-
-def recommendations_col(q_blank: Column, **metric_cols: Column) -> Column:
+def _recommendations_sql() -> str:
     """array<string> of '{Metric}: {advice}' lines per non-excellent
     metric (generate_recommendations, quality_config.py:96-103), with the
     blank hard blocker short-circuiting to the single re-scan line
     (quality_config.py:109-116). Metric order is pinned
-    (core/quality._METRIC_ORDER) so the array matches the oracle."""
+    (core/quality._METRIC_ORDER) so the array matches the oracle. A
+    metric's category is excellent/good/medium/low by the threshold
+    table; a reverse metric is categorized on 1-value
+    (core/quality.metric_category; quality_config.py:17-27)."""
+    s = sqltext.string
     entries = []
     for m in _METRIC_ORDER:
-        cat = _category_col(m, metric_cols[m])
-        texts = RECOMMENDATION_TEXT[m]
+        col = sqltext.ident(_METRIC_COL[m])
+        v = f"({_d(1.0)} - {col})" if m in REVERSE_METRICS else col
+        exc, good, med = METRIC_THRESHOLDS[m]
+        cat = (f"CASE WHEN ({v} >= {_d(exc)}) THEN 'excellent' "
+               f"WHEN ({v} >= {_d(good)}) THEN 'good' "
+               f"WHEN ({v} >= {_d(med)}) THEN 'medium' ELSE 'low' END")
         label = m.replace("_", " ").capitalize()
-        e = None
-        for c in ("good", "medium", "low"):
-            lit = F.lit(f"{label}: {texts[c]}")
-            e = (F.when(cat == c, lit) if e is None
-                 else e.when(cat == c, lit))
-        entries.append(e)  # null on 'excellent'
-    recs = F.filter(F.array(*entries), lambda x: x.isNotNull())
-    return F.when(q_blank >= F.lit(BLANK_LOW),
-                  F.array(F.lit(BLANK_RECOMMENDATION))).otherwise(recs)
+        entries.append("CASE " + " ".join(   # NULL on 'excellent'
+            f"WHEN ({cat} = '{c}') "
+            f"THEN {s(f'{label}: {RECOMMENDATION_TEXT[m][c]}')}"
+            for c in ("good", "medium", "low")) + " END")
+    recs = f"filter(array({', '.join(entries)}), x -> (x IS NOT NULL))"
+    return (f"CASE WHEN {_BLANK_HARD} "
+            f"THEN array({s(BLANK_RECOMMENDATION)}) ELSE {recs} END")
+
+
+CONFIDENCE_SQL = _confidence_sql()
+VERDICT_SQL = _verdict_sql()
+# the P4 preprocessing-need predicate (api-gateway/app.py:132-219
+# analog) over the verdict, inlined so it rides the verdict's projection
+NEEDS_PREPROCESSING_SQL = (f"(({VERDICT_SQL}) IN ('pre-processing', "
+                           "'azure document analysis'))")
+RECOMMENDATIONS_SQL = _recommendations_sql()
 
 
 def with_verdict(df: DataFrame) -> DataFrame:
     """Add confidence / verdict / needs_preprocessing / recommendations
-    columns (pure SQL over the ten q_* metrics)."""
-    df = df.withColumn("confidence", confidence_col(
-        F.col("q_legibility"), F.col("q_completeness"), F.col("q_skew"),
-        F.col("q_noise"), F.col("q_contrast"), F.col("q_brightness"),
-        q_blank=F.col("q_blank")))
-    df = df.withColumn("verdict", verdict_col(F.col("q_blank"),
-                                              F.col("confidence")))
-    df = df.withColumn("needs_preprocessing",
-                       needs_preprocessing_col(F.col("verdict")))
-    return df.withColumn("recommendations", recommendations_col(
-        F.col("q_blank"),
-        **{m: F.col(c) for m, c in _METRIC_COL.items()}))
+    columns (pure SQL over the ten q_* metrics; two projections, the
+    second reading ``confidence``)."""
+    return (df.withColumns({"confidence": F.expr(CONFIDENCE_SQL)})
+              .withColumns({
+                  "verdict": F.expr(VERDICT_SQL),
+                  "needs_preprocessing": F.expr(NEEDS_PREPROCESSING_SQL),
+                  "recommendations": F.expr(RECOMMENDATIONS_SQL)}))

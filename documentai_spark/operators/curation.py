@@ -91,7 +91,7 @@ def with_curation_flags(df: DataFrame, *, id_col: str = "doc_id",
     band identically, so banding members too was quadratic in the
     group size) -> shingle-Jaccard verify -> transitive cluster closure
     (``dedup.near_dedup``'s stages; the closure is one lazy union-find
-    pass, ``dedup.cluster_pairs``, so building the frame runs no Spark
+    pass, ``dedup.closure_labels``, so building the frame runs no Spark
     job for it) — and
     adds ``is_near_dup``: the row is NOT its cluster's min-id
     representative *and* is not already an exact duplicate, so drop
@@ -113,6 +113,14 @@ def with_curation_flags(df: DataFrame, *, id_col: str = "doc_id",
     long-domain exact-dup winner). Mutually exclusive with
     ``near_dedup=True``.
 
+    Both paths join the same way: only the rows whose rep is ANOTHER
+    node (the closure's labels, or ``near_reps`` filtered to
+    ``id != cluster_rep``), as a broadcast; a row with no match is its
+    own rep. The labelled nodes are the closure's one-task output, which
+    CLAUDE.md bounds by the near-duplicate count (about 10^7 per GiB),
+    so the broadcast adds no scale limit the closure does not already
+    have — and the wide document rows are not shuffled by id.
+
     ``near_stats``: a dict the closure fills with ``rounds`` = 1 (one
     pass over the verified edges) when ``near_dedup=True``.
     """
@@ -122,40 +130,42 @@ def with_curation_flags(df: DataFrame, *, id_col: str = "doc_id",
     if near_reps is not None and "cluster_rep" not in near_reps.columns:
         raise ValueError("near_reps must be a (id, cluster_rep) table "
                          "(dedup.cluster_pairs output)")
-    reserved = {"_ct_fp", "keep", "is_dup", "bad_lang", "bad_len",
-                "low_conf"}
+    reserved = {"keep", "is_dup", "bad_lang", "bad_len", "low_conf"}
     if use_near:
         reserved |= {"is_near_dup", "_ct_rep"}
     clash = reserved & set(df.columns)
     if clash:
         # exact-name collisions would be silently clobbered by the
-        # withColumn chain below — refuse loudly, matching the
+        # projections below — refuse loudly, matching the
         # predict_with_topk guard (ADVICE r4)
         raise ValueError(
             f"input columns collide with with_curation_flags outputs: "
             f"{sorted(clash)}")
     text = F.col(text_col)
-    # near dedup's closure labels live in the LONG domain, so the
-    # exact-dup winner must be picked there too: with string ids whose
-    # native and numeric orderings disagree ('9' vs '10'), a cluster
-    # could otherwise lose EVERY member (exact window drops one, the
-    # closure rep drops the other). checked_long fails fast on any id
-    # outside the long domain with an error naming the fix.
-    out = df.withColumn("_ct_fp", fingerprint_col(text))
+    # the window partitions on the fingerprint expression itself: the
+    # analyzer projects it below the exchange and drops it after, so no
+    # _ct_fp column is added and dropped by hand
     if use_near:
+        # near dedup's closure labels live in the LONG domain, so the
+        # exact-dup winner must be picked there too: with string ids
+        # whose native and numeric orderings disagree ('9' vs '10'), a
+        # cluster could otherwise lose EVERY member (exact window drops
+        # one, the closure rep drops the other). checked_long fails
+        # fast on any id outside the long domain with an error naming
+        # the fix.
         from documentai_spark.functions.ids import checked_long
-        dup_id = checked_long(F.col(id_col), "with_curation_flags",
-                              df.schema[id_col].dataType)
+        lid = checked_long(id_col, "with_curation_flags",
+                           df.schema[id_col].dataType)
         # row_number, not value-compare (r7 review): ids that TIE in
-        # the long domain would both miss a `dup_id > min(dup_id)`
-        # compare and the duplicate text would survive; the (long,
-        # string) rank flags exactly the non-winner — the SAME ordering
+        # the long domain would both miss a `lid > min(lid)` compare
+        # and the duplicate text would survive; the (long, string) rank
+        # flags exactly the non-winner — the SAME ordering
         # exact_rep_rows uses to elect the banded representative below.
         # (Non-canonical string ids like '007' now fail fast in
         # checked_long rather than colliding at all.)
-        w_fp = Window.partitionBy("_ct_fp").orderBy(
-            dup_id.asc(), F.col(id_col).asc())
-        out = out.withColumn("is_dup", F.row_number().over(w_fp) > 1)
+        w_fp = Window.partitionBy(fingerprint_col(text)).orderBy(
+            lid.asc(), F.col(id_col).asc())
+        is_dup = F.row_number().over(w_fp) > 1
     else:
         # checked_non_null (r7 review): a NULL id makes the comparison
         # NULL, keep NULL, and the row silently vanishes from the kept
@@ -163,14 +173,13 @@ def with_curation_flags(df: DataFrame, *, id_col: str = "doc_id",
         # checked_id guards (they only see keep=true rows)
         from documentai_spark.functions.ids import checked_non_null
         dup_id = checked_non_null(F.col(id_col), "with_curation_flags")
-        out = out.withColumn("is_dup",
-                             dup_id > F.min(dup_id).over(
-                                 Window.partitionBy("_ct_fp")))
-    out = out.drop("_ct_fp")
+        is_dup = dup_id > F.min(dup_id).over(
+            Window.partitionBy(fingerprint_col(text)))
+    out = df.withColumn("is_dup", is_dup)
     if use_near:
         if near_reps is None:
             from documentai_spark.operators.dedup import (
-                cluster_pairs, exact_rep_rows, minhash_dedup_pairs,
+                closure_labels, exact_rep_rows, minhash_dedup_pairs,
             )
             # band only exact-dup representatives (r7 review): an
             # m-copy group's identical signatures otherwise emit
@@ -185,26 +194,27 @@ def with_curation_flags(df: DataFrame, *, id_col: str = "doc_id",
                 id_col=id_col, num_hashes=num_hashes, bands=bands,
                 jaccard_threshold=jaccard_threshold,
                 max_bucket=max_bucket)
-            reps = cluster_pairs(pairs, rep_src.select(id_col),
-                                 a_col="id_a",
-                                 b_col="id_b", id_col=id_col,
-                                 stats=near_stats)
+            labels = closure_labels(pairs, a_col="id_a", b_col="id_b",
+                                    stats=near_stats)
+            reps = labels.select(F.col("node").alias(id_col),
+                                 F.col("rep").alias("_ct_rep"))
         else:
-            reps = near_reps.select(id_col, "cluster_rep")
-        # checked here TOO (r7 review): relying on dup_id's assert
-        # assumes is_dup survives column pruning — a caller selecting
-        # only is_near_dup lets Spark prune the window and its guard,
-        # and a bad id would silently NULL the dedup decision. The
-        # duplicate assert costs nothing (same expression, one codegen
-        # projection) and holds under ANY pruning.
-        lid = checked_long(F.col(id_col), "with_curation_flags",
-                           df.schema[id_col].dataType)
-        out = (out.join(reps.withColumnRenamed("cluster_rep", "_ct_rep"),
-                        id_col, "left")
-                  .withColumn(
-                      "is_near_dup",
-                      (lid != F.coalesce(F.col("_ct_rep"), lid))
-                      & ~F.col("is_dup"))
+            reps = near_reps.select(id_col,
+                                    F.col("cluster_rep").alias("_ct_rep"))
+        # one join rule for both paths (see the docstring): broadcast
+        # only the rows whose rep is another node
+        reps = reps.filter(F.col(id_col) != F.col("_ct_rep"))
+        # lid is checked here TOO (r7 review): relying on the window's
+        # assert assumes is_dup survives column pruning — a caller
+        # selecting only is_near_dup lets Spark prune the window and
+        # its guard, and a bad id would silently NULL the dedup
+        # decision. The duplicate assert costs nothing (same
+        # expression, one codegen projection) and holds under ANY
+        # pruning.
+        out = (out.join(F.broadcast(reps), id_col, "left")
+                  .withColumn("is_near_dup",
+                              (lid != F.coalesce(F.col("_ct_rep"), lid))
+                              & ~F.col("is_dup"))
                   .drop("_ct_rep"))
     return with_stateless_flags(
         out, text_col=text_col, confidence_col=confidence_col,
@@ -233,18 +243,14 @@ def with_stateless_flags(df: DataFrame, *, text_col: str = "text",
     its reason on the books.
     """
     text = F.col(text_col)
-    out = (df.withColumn("bad_lang",
-                         stopword_ratio_col(text)
-                         < F.lit(min_stopword_ratio))
-             .withColumn("bad_len",
-                         (token_count_col(text) < F.lit(min_tokens))
-                         | (token_count_col(text) > F.lit(max_tokens)))
-             .withColumn("low_conf",
-                         F.coalesce(
-                             F.col(confidence_col) < F.lit(min_confidence),
-                             F.lit(True))))
+    n_tok = token_count_col(text)
+    flags = {
+        "bad_lang": stopword_ratio_col(text) < F.lit(min_stopword_ratio),
+        "bad_len": (n_tok < F.lit(min_tokens)) | (n_tok > F.lit(max_tokens)),
+        "low_conf": F.coalesce(F.col(confidence_col) < F.lit(min_confidence),
+                               F.lit(True))}
     if "is_dup" not in df.columns:
-        out = out.withColumn("is_dup", F.lit(False))
+        flags["is_dup"] = F.lit(False)
     keep = ~(F.col("is_dup") | F.col("bad_lang") | F.col("bad_len")
              | F.col("low_conf"))
     if "is_near_dup" in df.columns:
@@ -257,7 +263,7 @@ def with_stateless_flags(df: DataFrame, *, text_col: str = "text",
         # threshold (streaming_curate/near_curate_finish lm_threshold=,
         # job.py --lm-threshold) — same fold-if-present contract
         keep = keep & ~F.col("high_perplexity")
-    return out.withColumn("keep", keep)
+    return df.withColumns(flags).withColumn("keep", keep)
 
 
 def corpus_report(docs: DataFrame, *, text_col: str = "text",

@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from documentai_spark.functions import sqltext
+
 
 def normalized_text(col: Column) -> Column:
     """Whitespace-collapsed lowercase (textstats.normalize_for_fingerprint)."""
@@ -119,8 +121,7 @@ def exact_rep_rows(df: DataFrame, text_col: str = "text",
     """
     from documentai_spark.functions.ids import checked_long
 
-    lid = checked_long(F.col(id_col), context,
-                       df.schema[id_col].dataType)
+    lid = checked_long(id_col, context, df.schema[id_col].dataType)
     row = F.struct(lid.alias("_l"),
                    F.col(id_col).cast("string").alias("_s"),
                    F.col(id_col).alias("_id"),
@@ -292,12 +293,17 @@ def minhash_signatures_agg(df: DataFrame, text_col: str = "text",
         F.array(*[F.col(f"_h{i}") for i in range(num_hashes)]).alias("_sig"))
 
 
-def band_structs(sig_col, num_hashes: int, bands: int):
+def band_structs(sig_col: str, num_hashes: int, bands: int) -> Column:
     """``array<struct<band_idx int, band_hash bigint>>`` — the banded
-    LSH bucket keys over a signature column. One definition shared by
-    the batch candidate join (:func:`minhash_lsh_candidates`) and the
-    streaming state op (streaming/near_dedup.py) so both bucket
-    bit-identically."""
+    LSH bucket keys over the signature column named ``sig_col``. One
+    definition shared by the batch candidate join
+    (:func:`minhash_lsh_candidates`) and the streaming state op
+    (streaming/near_dedup.py) so both bucket bit-identically.
+
+    Band ``b`` hashes elements ``b*r+1 .. b*r+r`` (1-based
+    ``element_at``, r = num_hashes // bands) with one ``xxhash64``. The
+    tree is parsed from SQL text in one ``F.expr``: built node by node
+    it cost ~1,300 py4j round trips per plan at 64 hashes x 16 bands."""
     if bands < 1 or num_hashes % bands != 0:
         # a remainder silently drops the trailing hashes from banding
         # (shifting the LSH threshold curve away from what the caller
@@ -308,11 +314,12 @@ def band_structs(sig_col, num_hashes: int, bands: int):
             f"{num_hashes} exactly (rows-per-band = num_hashes // "
             "bands; every hash must participate in exactly one band)")
     r = num_hashes // bands
-    return F.array(*[
-        F.struct(F.lit(b).alias("band_idx"),
-                 F.xxhash64(*[F.element_at(sig_col, b * r + j + 1)
-                              for j in range(r)]).alias("band_hash"))
-        for b in range(bands)])
+    sig = sqltext.ident(sig_col)
+    return F.expr("array(" + ", ".join(
+        f"named_struct('band_idx', {b}, 'band_hash', xxhash64("
+        + ", ".join(f"element_at({sig}, {b * r + j + 1})"
+                    for j in range(r))
+        + "))" for b in range(bands)) + ")")
 
 
 def minhash_lsh_candidates(df: DataFrame, text_col: str = "text",
@@ -669,17 +676,14 @@ def _free_local_checkpoint(df: DataFrame) -> None:
         pass
 
 
-def cluster_pairs(pairs: DataFrame, nodes: DataFrame, *,
-                  a_col: str = "doc_a", b_col: str = "doc_b",
-                  id_col: str = "doc_id",
-                  stats: dict | None = None) -> DataFrame:
-    """Near-dup PAIRS -> clusters: connected components by one
-    union-find pass over the edge list. Returns ``(id_col,
-    cluster_rep)`` where ``cluster_rep`` is the smallest id in the
-    component — the canonical representative a dedup pass keeps
-    (``filter(id == cluster_rep)``). ``nodes`` supplies the full id
-    universe, so documents in no pair come out as their own singleton
-    representative.
+def closure_labels(pairs: DataFrame, *, a_col: str = "doc_a",
+                   b_col: str = "doc_b",
+                   stats: dict | None = None) -> DataFrame:
+    """Near-dup PAIRS -> ``(node long, rep long)`` for every node that
+    HAS an edge: connected components by one union-find pass, ``rep``
+    the smallest id in the node's component. A node in no pair is its
+    own representative and gets no row; :func:`cluster_pairs` adds the
+    full id universe back.
 
     This closes the pair->keep-set gap: MinHash/SimHash/Jaccard emit
     PAIRS, but transitive near-duplicates (A~B, B~C, A!~C) must collapse
@@ -687,15 +691,14 @@ def cluster_pairs(pairs: DataFrame, nodes: DataFrame, *,
 
     Shape: the ``(src, dst)`` edges go through one exchange into a
     single ``mapInArrow`` task that streams them into
-    ``core.components`` (union by smaller root, path halving) and emits
-    ``(node, rep)`` for every node with an edge; the id universe is
-    left-joined to that table, ``coalesce(rep, node)``. The result is
-    lazy — building it runs no Spark job and stores nothing — and its
-    cost does not depend on the components' diameter. The one task
-    holds a dict entry per node WITH an edge (about 100 B each), not
-    the edges, so it is bounded by the number of near-duplicate
-    documents, not by the corpus. ``stats["rounds"]`` is set to 1: one
-    pass over the edges.
+    ``core.components`` (union by smaller root, path halving). The
+    result is lazy — building it runs no Spark job and stores nothing
+    — and its cost does not depend on the components' diameter. The
+    one task holds a dict entry per node WITH an edge (about 100 B
+    each), not the edges, so it is bounded by the number of
+    near-duplicate documents, not by the corpus; the output has one row
+    per such node, which is what lets ``with_curation_flags`` broadcast
+    it. ``stats["rounds"]`` is set to 1: one pass over the edges.
 
     Ids must be losslessly long-castable (the label domain); a NULL /
     malformed / truncating id fails the action with a named error
@@ -722,19 +725,36 @@ def cluster_pairs(pairs: DataFrame, nodes: DataFrame, *,
                 names=["node", "rep"])
 
     edges = pairs.select(
-        checked_long(F.col(a_col), "cluster_pairs",
+        checked_long(a_col, "cluster_pairs",
                      pairs.schema[a_col].dataType).alias("src"),
-        checked_long(F.col(b_col), "cluster_pairs",
+        checked_long(b_col, "cluster_pairs",
                      pairs.schema[b_col].dataType).alias("dst"))
-    labels = edges.repartition(1).mapInArrow(_label,
-                                             "node long, rep long")
-    ids = (nodes.select(checked_long(F.col(id_col), "cluster_pairs",
-                                     nodes.schema[id_col].dataType)
-                        .alias("node"))
-                .distinct())
     if stats is not None:
         # observability hook (perfbench, the sf1 export evidence)
         stats["rounds"] = 1
+    return edges.repartition(1).mapInArrow(_label, "node long, rep long")
+
+
+def cluster_pairs(pairs: DataFrame, nodes: DataFrame, *,
+                  a_col: str = "doc_a", b_col: str = "doc_b",
+                  id_col: str = "doc_id",
+                  stats: dict | None = None) -> DataFrame:
+    """Near-dup PAIRS -> clusters over a full id universe. Returns
+    ``(id_col, cluster_rep)`` where ``cluster_rep`` is the smallest id
+    in the component — the canonical representative a dedup pass keeps
+    (``filter(id == cluster_rep)``). ``nodes`` supplies the id
+    universe, so documents in no pair come out as their own singleton
+    representative: the distinct ids left-joined to
+    :func:`closure_labels`, ``coalesce(rep, node)``. Lazy, like the
+    labels; ``stats`` as there.
+    """
+    from documentai_spark.functions.ids import checked_long
+
+    labels = closure_labels(pairs, a_col=a_col, b_col=b_col, stats=stats)
+    ids = (nodes.select(checked_long(id_col, "cluster_pairs",
+                                     nodes.schema[id_col].dataType)
+                        .alias("node"))
+                .distinct())
     return (ids.join(labels, "node", "left")
                .select(F.col("node").alias(id_col),
                        F.coalesce(F.col("rep"), F.col("node"))

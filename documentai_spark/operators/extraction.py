@@ -199,41 +199,40 @@ entity_udf = entity_udf.asNondeterministic()
 extract_quality_udf = extract_quality_udf.asNondeterministic()
 
 
+def _with_struct_fields(df: DataFrame, udf_col, fields: list[str],
+                        tmp: str) -> DataFrame:
+    """``df`` plus one column per struct field of ``udf_col`` — three
+    plan-building calls however many fields (a withColumn per field
+    re-analyzed the whole plan each time)."""
+    return (df.withColumn(tmp, udf_col)
+              .withColumns({f: F.col(f"{tmp}.{f}") for f in fields})
+              .drop(tmp))
+
+
 def with_extraction_and_quality(df: DataFrame,
                                 text_col: str = "text") -> DataFrame:
     """Fused stage used by the flagship pipeline (no shuffle)."""
-    out = df.withColumn("_xq", extract_quality_udf(F.col(text_col)))
-    for f in FUSED_RESULT_TYPE.fieldNames():
-        out = out.withColumn(f, F.col(f"_xq.{f}"))
-    return out.drop("_xq")
+    return _with_struct_fields(df, extract_quality_udf(F.col(text_col)),
+                               FUSED_RESULT_TYPE.fieldNames(), "_xq")
 
 
 def with_extraction(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Add kind / extracted_text / spans columns (no shuffle)."""
-    return (df.withColumn("_x", extract_udf(F.col(text_col)))
-              .withColumn("kind", F.col("_x.kind"))
-              .withColumn("extracted_text", F.col("_x.extracted_text"))
-              .withColumn("spans", F.col("_x.spans"))
-              .drop("_x"))
+    return _with_struct_fields(df, extract_udf(F.col(text_col)),
+                               EXTRACT_RESULT_TYPE.fieldNames(), "_x")
 
 
 def with_quality(df: DataFrame, raw_col: str = "text",
                  extracted_col: str = "extracted_text") -> DataFrame:
     """Add the TEN q_* metric columns (no shuffle; the r3 ten-metric ensemble — see core/quality)."""
-    out = df.withColumn("_q", quality_udf(F.col(raw_col),
-                                          F.col(extracted_col)))
-    for f in QUALITY_RESULT_TYPE.fieldNames():
-        out = out.withColumn(f, F.col(f"_q.{f}"))
-    return out.drop("_q")
+    return _with_struct_fields(
+        df, quality_udf(F.col(raw_col), F.col(extracted_col)),
+        QUALITY_RESULT_TYPE.fieldNames(), "_q")
 
 
 def with_entities(df: DataFrame,
                   extracted_col: str = "extracted_text") -> DataFrame:
     """Add entities map + entity_spans + extraction_confidence (no
     shuffle)."""
-    return (df.withColumn("_e", entity_udf(F.col(extracted_col)))
-              .withColumn("entities", F.col("_e.entities"))
-              .withColumn("entity_spans", F.col("_e.entity_spans"))
-              .withColumn("extraction_confidence",
-                          F.col("_e.extraction_confidence"))
-              .drop("_e"))
+    return _with_struct_fields(df, entity_udf(F.col(extracted_col)),
+                               ENTITY_RESULT_TYPE.fieldNames(), "_e")

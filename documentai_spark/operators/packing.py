@@ -122,7 +122,7 @@ def pack_sequences(docs: DataFrame, *, budget: int,
     # fails fast with a named error instead of an opaque ANSI cast
     # error (or a silently-truncated shard key on fractional ids)
     from documentai_spark.functions.ids import checked_long
-    lid = checked_long(F.col(id_col), "pack_sequences",
+    lid = checked_long(id_col, "pack_sequences",
                        docs.schema[id_col].dataType)
     # token_count_col is TOTAL (NULL text -> 0, r7), so n_tokens can
     # never reach the pandas stage as NaN — a NULL-text doc packs as a

@@ -71,7 +71,7 @@ class _Counts:
                  "upper", "markers", "cap_starts", "line_mean", "line_var",
                  "lines", "strong_lines", "shadow_chars", "glare_chars",
                  "ind_mean", "ind_var", "ind_drift", "ind_off", "ind_lag",
-                 "lead_ws", "trail_ws")
+                 "lead_ws", "trail_ws", "_texts", "_distinct")
 
     FIELDS = ("ws", "alnum", "control", "vowel", "letter", "tokens",
               "long_tokens", "upper", "markers", "cap_starts",
@@ -84,6 +84,8 @@ class _Counts:
         IS the other batch's text (identity extraction: plain rows incl.
         the CPU-dominant mega turns) and counts only the rest."""
         k = len(texts)
+        self._texts = texts
+        self._distinct = None
         self.n = np.fromiter((len(t) for t in texts), np.float64, k)
         for f in self.FIELDS:
             setattr(self, f, np.zeros(k, dtype=np.float64))
@@ -127,6 +129,15 @@ class _Counts:
                 (len(t) - len(t.lstrip()) for t in texts), np.float64, k)
             self.trail_ws = np.fromiter(
                 (len(t) - len(t.rstrip()) for t in texts), np.float64, k)
+
+    def distinct_chars(self) -> np.ndarray:
+        """len(set(t)) per row, counted on first use and kept (contrast
+        and shadow_glare both read it)."""
+        if self._distinct is None:
+            self._distinct = np.fromiter(
+                (len(set(t)) for t in self._texts), np.float64,
+                len(self._texts))
+        return self._distinct
 
     def _bulk_ascii(self, texts: list[str], out_idx: np.ndarray) -> None:
         """One packed buffer; '\\n' separators keep token runs row-local.
@@ -393,10 +404,8 @@ def contrast_scores(extracted: pd.Series,
                     counts: _Counts | None = None) -> np.ndarray:
     """Vector of core.quality.contrast_score (line-length-variance
     ensemble)."""
-    texts = extracted.fillna("").tolist()
-    c = counts if counts is not None else _Counts(texts)
-    distinct = np.fromiter((len(set(t)) for t in texts),
-                           dtype=np.float64, count=len(texts))
+    c = counts if counts is not None else _Counts(extracted.fillna("").tolist())
+    distinct = c.distinct_chars()
     with np.errstate(divide="ignore", invalid="ignore"):
         cv = np.where(c.line_mean > 0,
                       np.sqrt(c.line_var) / c.line_mean, 1.0)
@@ -473,10 +482,8 @@ def shadow_glare_scores(extracted: pd.Series,
                         counts: _Counts | None = None) -> np.ndarray:
     """Vector of core.quality.shadow_glare_score (dense/sparse-run
     ensemble; reverse metric: high = bad; empty -> 1.0)."""
-    texts = extracted.fillna("").tolist()
-    c = counts if counts is not None else _Counts(texts)
-    distinct = np.fromiter((len(set(t)) for t in texts),
-                           dtype=np.float64, count=len(texts))
+    c = counts if counts is not None else _Counts(extracted.fillna("").tolist())
+    distinct = c.distinct_chars()
     with np.errstate(divide="ignore", invalid="ignore"):
         shadow_frac = np.where(c.n > 0, c.shadow_chars / c.n, 0.0)
         glare_frac = np.where(c.n > 0, c.glare_chars / c.n, 0.0)

@@ -34,7 +34,7 @@ from documentai_spark.functions.verdict import with_verdict
 from documentai_spark.operators.extraction import (
     with_entities, with_extraction_and_quality,
 )
-from documentai_spark.operators.skew import salted_repartition
+from documentai_spark.operators.skew import restore_order, salted_repartition
 
 OUTPUT_COLUMNS = [
     "conv_id", "turn_idx", "role", "tool", "ts", "kind", "extracted_text",
@@ -79,9 +79,7 @@ def extraction_pipeline(transcripts: DataFrame, *,
         # sort the NARROW input inside the range-exchange stage; the UDF
         # projections preserve per-partition row order, so the wide output
         # is already globally ordered — no post-UDF sort of big rows.
-        df = (transcripts.repartitionByRange(
-                  salt_partitions, F.col("conv_id"), F.col("turn_idx"))
-              .sortWithinPartitions("conv_id", "turn_idx"))
+        df = restore_order(transcripts, num_partitions=salt_partitions)
     else:
         df = salted_repartition(transcripts, salt_partitions,
                                 salt_buckets=salt_buckets)

@@ -157,7 +157,7 @@ def streaming_near_dup_verdicts(stream: DataFrame, *,
     payload = F.struct(*[F.col(c) for c in stream.columns])
     sig = (with_minhash_signature_local(src, text_col, num_hashes, "_sig")
            .withColumn("_id",
-                       checked_long(F.col(id_col), "streaming_near_dup",
+                       checked_long(id_col, "streaming_near_dup",
                                     stream.schema[id_col].dataType)))
     # barrier before the band explode: `_sig` feeds every band struct
     # and the per-band-row projection, and projection collapse may
@@ -169,8 +169,8 @@ def streaming_near_dup_verdicts(stream: DataFrame, *,
     sig = sig.filter(F.spark_partition_id() >= 0)
     ex = (sig.select(
               "_id", "_sig",
-              F.explode(band_structs(F.col("_sig"), num_hashes,
-                                     bands)).alias("_band"),
+              F.explode(band_structs("_sig", num_hashes, bands))
+              .alias("_band"),
               payload.alias("_doc"),
               *([F.col(ts_col).alias("_ts")] if ttl_ms is not None
                 else []))

@@ -32,3 +32,32 @@ def transcripts_path(tmp_path_factory):
                                   rows_per_file=500)
     assert n > 1000
     return path
+
+
+@pytest.fixture
+def py4j_calls(spark):
+    """``with py4j_calls() as n: ...`` counts the py4j commands this
+    thread sends to the JVM inside the block into ``n[0]`` (the gateway's
+    own garbage-collection thread is not counted)."""
+    import contextlib
+    import threading
+
+    client = spark.sparkContext._gateway._gateway_client
+
+    @contextlib.contextmanager
+    def count():
+        n = [0]
+        me = threading.get_ident()
+        send = client.send_command
+
+        def counted(*args, **kwargs):
+            if threading.get_ident() == me:
+                n[0] += 1
+            return send(*args, **kwargs)
+
+        client.send_command = counted
+        try:
+            yield n
+        finally:
+            client.send_command = send
+    return count

@@ -751,3 +751,85 @@ def test_stratified_sample_retries_free_superseded_checkpoints(spark):
     exact = stratified_sample(df, group_cols=["grp"], k=5, seed=1)
     assert got == sorted((r.grp, r.doc_id) for r in exact.collect())
     assert n_persisted() - before <= 2
+
+
+def _near_rows(as_string: bool):
+    """Exact-dup groups, a transitive chain (1~3~4 where 1 and 4 are
+    further apart) and ids whose string and numeric orders disagree."""
+    base = ("the quick brown fox jumps over the lazy dog and then it "
+            "runs far away into the deep woods where it was happy to "
+            "rest for a while before returning to the warm den")
+    other = ("completely different content about spark plans and "
+             "shuffles and broadcast joins in a distributed engine "
+             "that keeps the optimizer busy for a good long while")
+    rows = [(9, base), (10, base), (3, base + " extra"),
+            (4, base + " extra tail"), (12, base + " extra tail end"),
+            (5, other), (50, other), (7, other + " and then some"),
+            (8, "too short to keep ok")]
+    return [(str(i) if as_string else i, t) for i, t in rows]
+
+
+def test_near_flags_equal_full_table_reference(spark):
+    """Both near-dup paths join only the broadcast labels of nodes whose
+    rep is another node; their flags equal a reference that joins the
+    FULL cluster_pairs table (every exact-dup representative, singletons
+    included). Checked on long and on string ids."""
+    import re
+
+    from pyspark.sql import functions as F
+
+    from documentai_spark.operators.curation import with_curation_flags
+    from documentai_spark.operators.dedup import (
+        cluster_pairs, exact_rep_rows, minhash_dedup_pairs,
+    )
+
+    for as_string in (False, True):
+        df = spark.createDataFrame(
+            _near_rows(as_string),
+            ["doc_id", "text"]).withColumn("confidence", F.lit(1.0))
+        rep_src = exact_rep_rows(df.select("doc_id", "text"))
+        pairs = minhash_dedup_pairs(rep_src, jaccard_threshold=0.7,
+                                    max_bucket=4096)
+        reps = cluster_pairs(pairs, rep_src.select("doc_id"),
+                             a_col="id_a", b_col="id_b")
+        full = {r.doc_id: r.cluster_rep for r in reps.collect()}
+        near = with_curation_flags(df, near_dedup=True,
+                                   jaccard_threshold=0.7)
+        via_reps = with_curation_flags(df, near_reps=reps)
+        cols = ["is_dup", "is_near_dup", "keep"]
+        got = {r.doc_id: tuple(r[c] for c in cols)
+               for r in near.collect()}
+        assert got == {r.doc_id: tuple(r[c] for c in cols)
+                       for r in via_reps.collect()}
+        want = {d: int(d) != full.get(int(d), int(d)) and not f[0]
+                for d, f in got.items()}
+        assert {d: f[1] for d, f in got.items()} == want
+        # the chain (rep 3; 9 is an exact-group winner but not the
+        # chain's min id), both exact groups and the other cluster fired
+        fired = [sorted(int(d) for d, f in got.items() if f[i])
+                 for i in (0, 1)]
+        assert fired == [[10, 50], [4, 7, 9, 12]]
+        for frame in (near, via_reps):
+            # the plan as run (AQE's final plan, both frames collected)
+            plan = frame._jdf.queryExecution().executedPlan().toString() \
+                .split("== Initial Plan ==")[0]
+            assert re.search(r"BroadcastHashJoin \[[^]]*\], \[[^]]*\], "
+                             r"LeftOuter, BuildRight", plan), plan
+            assert "SortMergeJoin" not in plan, plan
+
+
+def test_curate_build_py4j_budget(spark, py4j_calls):
+    """Building the near-dedup curation plan stays under half the py4j
+    commands of the node-by-node builders it replaced (6,900 on this
+    frame, both eager LSH checkpoints included): the constant trees are
+    SQL text and each projection is one call."""
+    words = ("alpha bravo charlie delta echo foxtrot golf hotel india "
+             "juliet kilo lima mike november oscar papa quebec romeo "
+             "sierra tango").split()
+    docs = spark.createDataFrame(
+        [(i, " ".join(words[(i * 7 + j) % 20] for j in range(25 + i % 5)))
+         for i in range(24)], "doc_id long, text string")
+    curate_documents(docs, near_dedup=True)   # warm the UDF bindings
+    with py4j_calls() as n:
+        curate_documents(docs, near_dedup=True)
+    assert n[0] < 6900 // 2, n[0]

@@ -376,6 +376,45 @@ def test_band_structs_validates_divisibility(spark):
         minhash_lsh_candidates(df, num_hashes=64, bands=100).collect()
 
 
+def _band_structs_element_at(sig_col, num_hashes: int, bands: int):
+    """The node-by-node ``F.element_at`` construction band_structs
+    replaced, kept as its reference."""
+    from pyspark.sql import functions as F
+
+    r = num_hashes // bands
+    return F.array(*[
+        F.struct(F.lit(b).alias("band_idx"),
+                 F.xxhash64(*[F.element_at(sig_col, b * r + j + 1)
+                              for j in range(r)]).alias("band_hash"))
+        for b in range(bands)])
+
+
+def test_band_structs_matches_element_at_reference(spark):
+    """The SQL-text band keys equal the element_at construction, value
+    and type, on random signatures (negatives and the long extremes
+    included) at two band shapes."""
+    import random
+
+    from pyspark.sql import functions as F
+
+    from documentai_spark.operators.dedup import band_structs
+
+    rng = random.Random(7)
+    sigs = [[rng.choice([rng.getrandbits(64) - 2 ** 63, -2 ** 63,
+                         2 ** 63 - 1, 0]) for _ in range(64)]
+            for _ in range(30)]
+    df = spark.createDataFrame([(i, s) for i, s in enumerate(sigs)],
+                               "id int, _sig array<bigint>")
+    got = df.select(band_structs("_sig", 64, 16).alias("a"),
+                    band_structs("_sig", 12, 4).alias("b"))
+    want = df.select(_band_structs_element_at(F.col("_sig"), 64, 16)
+                     .alias("a"),
+                     _band_structs_element_at(F.col("_sig"), 12, 4)
+                     .alias("b"))
+    assert got.schema == want.schema
+    assert got.collect() == want.collect()
+
+
 def test_max_bucket_star_join_bounds_candidates(spark):
     """An oversized band bucket (near-identical mega-group) switches to
     star edges: candidate count is linear in the group, and the

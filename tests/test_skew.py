@@ -63,3 +63,33 @@ def test_restore_order_pins_range_partitions(spark):
     sp = spark.conf.get("spark.sql.shuffle.partitions")
     plan_d = restore_order(df)._jdf.queryExecution().analyzed().toString()
     assert sp in plan_d
+
+
+def test_pipeline_range_exchange_is_restore_order(spark):
+    """extraction_pipeline's ordered form takes its range exchange and
+    sort from restore_order: the physical plan equals the inline
+    repartitionByRange + sortWithinPartitions composition it replaced
+    (expression and plan ids masked)."""
+    import re
+
+    from documentai_spark.functions.verdict import with_verdict
+    from documentai_spark.operators.extraction import (
+        with_extraction_and_quality,
+    )
+    from documentai_spark.plans.pipeline import (
+        OUTPUT_COLUMNS, TRANSCRIPT_DDL, extraction_pipeline,
+    )
+
+    df = spark.createDataFrame(
+        [("c%d" % i, j, "user", "turn %d.%d" % (i, j), None, None)
+         for i in range(3) for j in range(4)], TRANSCRIPT_DDL)
+    inline = (df.repartitionByRange(7, F.col("conv_id"), F.col("turn_idx"))
+                .sortWithinPartitions("conv_id", "turn_idx"))
+    inline = with_verdict(with_extraction_and_quality(inline)) \
+        .select(*OUTPUT_COLUMNS)
+
+    def plan(frame):
+        s = frame._jdf.queryExecution().executedPlan().toString()
+        return re.sub(r"#\d+L?|plan_id=\d+", "#", s)
+
+    assert plan(extraction_pipeline(df, salt_partitions=7)) == plan(inline)
