@@ -17,10 +17,6 @@ for color inputs — the cv2.cvtColor(..., COLOR_RGB2GRAY) analog used by
 every reference metric's shared_preprocessing). Encoders exist so tests
 and the synthetic media table can round-trip real bytes without any
 third-party dependency.
-
-Audio decoding is real too (RIFF/WAVE PCM, ``core.audiocodec``), and so
-is video since r5 (uncompressed RIFF/AVI, ``core.videocodec`` — its DIB
-frames reuse this module's palette/BGR/bottom-up conventions and luma).
 """
 
 from __future__ import annotations

@@ -1,10 +1,10 @@
 """Text-analysis primitives for training-data pipelines (pure Python).
 
 These are the large-scale-corpus operations layered on top of the
-extraction core (per the build brief): token counting, language-ID
-heuristics, quality ratios, and document fingerprinting. Each has a
-deliberately SQL-expressible definition so the Spark DataFrame version and
-the DuckDB oracle can compute the identical value (see
+extraction core (per the build brief): token counting, the stopword
+ratio behind the language heuristic, and document fingerprinting. Each
+has a deliberately SQL-expressible definition so the Spark DataFrame
+version and the DuckDB oracle can compute the identical value (see
 ``documentai_spark.functions.text`` for the Spark column expressions and
 ``__spark_entry__.oracle_sql`` for the SQL mirrors).
 
@@ -14,9 +14,6 @@ Definitions (pinned):
                          (WS_CLASS fields of the space-trimmed text).
 - ``stopword_ratio``   — ASCII-boundary stopword matches over the
                          lowercased text / max(token_count, 1), 6 dp.
-- ``punct_ratio``      — punctuation chars / total chars.
-- ``lang_id``          — 'en' if stopword_ratio >= 0.04 else 'unknown'
-                         (n-gram/stopword heuristic family).
 - ``fingerprint``      — md5 hex of the whitespace-normalized, lowercased
                          text (document fingerprint for exact dedup).
 - ``shingles``         — the w-token shingle set (for MinHash / Jaccard).
@@ -32,7 +29,6 @@ STOPWORDS = (
     "that", "for", "on", "with", "as", "at", "by", "be", "this", "are",
 )
 
-_PUNCT_RE = re.compile(r"[^\w\s]")
 # Pinned stopword boundary (r7): ASCII \b — equals Spark's explicit
 # [A-Za-z0-9_] lookarounds (curation.STOPWORD_PATTERN) and DuckDB RE2's
 # always-ASCII \b. Python's default \b is Unicode-aware, hence re.ASCII
@@ -73,16 +69,6 @@ def stopword_ratio(text: str) -> float:
         return 0.0
     n_sw = len(_STOPWORD_RE.findall(text.lower()))
     return round(n_sw / max(token_count(text), 1), 6)
-
-
-def punct_ratio(text: str) -> float:
-    if not text:
-        return 0.0
-    return len(_PUNCT_RE.findall(text)) / len(text)
-
-
-def lang_id(text: str) -> str:
-    return "en" if stopword_ratio(text) >= 0.04 else "unknown"
 
 
 def normalize_for_fingerprint(text: str) -> str:

@@ -348,27 +348,25 @@ def with_split(df: DataFrame, *, id_col: str = "doc_id",
     weights = weights or {"train": 0.9, "val": 0.05, "test": 0.05}
     if col in df.columns:
         raise ValueError(f"column {col!r} already exists")
-    total = float(sum(weights.values()))
     bucket = (F.conv(F.substring(
         F.md5(F.concat(F.lit(f"{seed}|"),
                        checked_id(F.col(id_col), "with_split"))), 1, 8),
         16, 10).cast("long") % 10_000)
-    names = list(weights)
-    acc = 0.0
+    *head, (last, _) = split_thresholds(weights)
     expr = None
-    for name in names[:-1]:
-        acc += weights[name] / total * 10_000
-        cond = bucket < F.lit(int(round(acc)))
+    for name, bound in head:
+        cond = bucket < F.lit(bound)
         expr = F.when(cond, F.lit(name)) if expr is None \
             else expr.when(cond, F.lit(name))
     # last split takes the remainder: thresholds always cover 0..9999
-    expr = F.lit(names[-1]) if expr is None else expr.otherwise(names[-1])
+    expr = F.lit(last) if expr is None else expr.otherwise(last)
     return df.withColumn(col, expr)
 
 
 def split_thresholds(weights: dict[str, float]) -> list[tuple[str, int]]:
     """(name, exclusive upper bucket bound) pairs in declaration order —
-    exposed so oracles replay the identical threshold arithmetic."""
+    the one definition of the cumulative thresholds, shared by
+    :func:`with_split` and the oracles that replay its arithmetic."""
     total = float(sum(weights.values()))
     out = []
     acc = 0.0

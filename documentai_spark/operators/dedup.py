@@ -143,18 +143,17 @@ def shingle_udf(w: int = 3):
     (:func:`minhash_signature_udf`) calls too, so both shingle
     bit-identically.
 
-    Why a pandas UDF and not the ``transform``/``slice`` column form
-    (kept below as ``shingle_col`` for short-text uses): higher-order
-    functions are interpreted, and the optimizer's projection/Generate
-    collapse re-inlines the tokenization subtree into the lambda and the
-    generator — measured on the r3 skew-stress corpus as PER-ELEMENT
-    re-evaluation of the full 150 KB normalize+split (minutes per
-    20k-token mega doc, O(len^2)). Staging the token array in a child
-    projection does not survive the optimizer either. The Arrow boundary
-    is a real barrier: normalization stays JVM-side (exactly
-    ``normalized_text``, which the DuckDB oracle mirrors), Python only
-    splits the pre-normalized string and joins w-token windows — ~ms per
-    mega doc, linear, and batch-streamed."""
+    Why a pandas UDF and not a ``transform``/``slice`` column form:
+    higher-order functions are interpreted, and the optimizer's
+    projection/Generate collapse re-inlines the tokenization subtree
+    into the lambda and the generator — measured on the r3 skew-stress
+    corpus as PER-ELEMENT re-evaluation of the full 150 KB
+    normalize+split (minutes per 20k-token mega doc, O(len^2)). Staging
+    the token array in a child projection does not survive the optimizer
+    either. The Arrow boundary is a real barrier: normalization stays
+    JVM-side (exactly ``normalized_text``, which the DuckDB oracle
+    mirrors), Python only splits the pre-normalized string and joins
+    w-token windows — ~ms per mega doc, linear, and batch-streamed."""
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
@@ -230,20 +229,6 @@ def with_minhash_signature_local(df: DataFrame, text_col: str = "text",
             "with_minhash_signature_local's output")
     sig = minhash_signature_udf(num_hashes, w)
     return df.withColumn(out_col, sig(normalized_text(F.col(text_col))))
-
-
-def shingle_col(text: Column, w: int = 3) -> Column:
-    """Single-column shingle form — ONLY for short-text rows (tests,
-    oracle mirrors): the embedded tokenization re-evaluates per element
-    inside the interpreted lambda, which is quadratic in document length.
-    Pipelines use ``with_shingles``."""
-    toks = F.split(normalized_text(text), " ")
-    n = F.size(toks)
-    return F.array_distinct(
-        F.when(n >= w, F.transform(
-            F.sequence(F.lit(0), n - F.lit(w)),
-            lambda i: F.concat_ws(" ", F.slice(toks, i + 1, F.lit(w)))))
-         .otherwise(F.array(normalized_text(text))))
 
 
 def minhash_signatures(df: DataFrame, text_col: str = "text",
@@ -493,31 +478,6 @@ def _fold_bit(h: Column, j: int) -> Column:
     return F.shiftright(half, j % 32).bitwiseAND(F.lit(1))
 
 
-def simhash_col(text: Column, bits: int = 64) -> Column:
-    """64-bit SimHash: per-bit majority over md5-fold token hashes.
-
-    bit_j(sig) = 1 iff sum over tokens of sign(bit_j(hash(tok))) > 0.
-    Unweighted tokens (weight extension: multiply the when() by a weight
-    column). Pure JVM expressions: 64 aggregate passes over the token
-    array per row — no shuffle, codegen-able.
-    """
-    toks = F.split(normalized_text(text), " ")
-    hashes = F.transform(toks, lambda t: _md5_fold(t))
-    def bit_sum(j: int) -> Column:
-        return F.aggregate(
-            hashes, F.lit(0),
-            lambda acc, h: acc + F.when(
-                _fold_bit(h, j) == 1, F.lit(1)).otherwise(F.lit(-1)))
-    out = F.lit(0).cast("long")
-    for j in range(bits):
-        # bit 63 is the two's-complement sign bit: 2**63 overflows a JVM
-        # long literal, but adding Long.MIN_VALUE sets the same bit
-        contrib = F.lit(-(2 ** 63)) if j == 63 else F.lit(2 ** j).cast("long")
-        out = out + F.when(bit_sum(j) > 0, contrib) \
-                     .otherwise(F.lit(0).cast("long"))
-    return out
-
-
 def simhash_udf():
     """Arrow-batched SimHash kernel over PRE-NORMALIZED text (exactly
     ``normalized_text``, computed JVM-side so the normalization pass the
@@ -596,10 +556,10 @@ def simhash_signatures_expr(df: DataFrame, text_col: str = "text",
 
     Tokens explode ONCE and hash ONCE; the 64 per-bit +/-1 contributions
     are narrow projections over that single hash column, and map-side
-    partial sums collapse before the shuffle. (The row-local
-    ``simhash_col`` variant re-evaluates the token-hash transform per bit
-    after projection collapse — measured ~10x slower again; kept for
-    single-row uses.)
+    partial sums collapse before the shuffle. (A row-local
+    ``transform``/``aggregate`` form re-evaluates the token-hash
+    transform per bit after projection collapse — measured ~10x slower
+    again.)
     """
     # split staged into its own projection: Generate re-evaluates an
     # inline generator expression pathologically on huge strings (same

@@ -585,8 +585,3 @@ def synthesize_labeled_docs_18(spark, n_per_class: int = 31,
             rows.append((i, " ".join(toks), label))
             i += 1
     return spark.createDataFrame(rows, ["doc_id", "text", "label_str"])
-
-
-def train_classifier(labeled: DataFrame, **kw) -> FrozenTextClassifier:
-    """Back-compat wrapper: fit + compile (see train_frozen_classifier)."""
-    return train_frozen_classifier(labeled, **kw)

@@ -1,36 +1,24 @@
-"""Multimodal columns: image/audio/video as opaque binary + typed metadata.
+"""Multimodal columns: images as opaque binary + typed metadata.
 
 The reference rasterizes PDF pages to grayscale pixmaps and runs
 image-quality kernels on them (quality_analysis_updated/
 universal_analyzer.py:37-39 raster scan; metrics/*.py pixel kernels).
 
-ALL THREE media legs decode real bytes since r5:
-
-- IMAGE (r3): PNG / BMP / PGM / PPM via the pure-stdlib codecs in
-  ``core.imagecodec`` (zlib inflate + scanline unfilter for PNG);
-  features are 4x4 block means of actual pixels, and
-  ``extract_media_quality`` runs the reference's pixel kernels
-  (white-ratio blank, mean-brightness, std-contrast, dark/bright-area
-  shadow/glare) on the decoded raster.
-- AUDIO (r4): RIFF/WAVE PCM via pure ``struct`` (``core.audiocodec``);
-  features are per-frame RMS energies over the actual samples.
-- VIDEO (r5): uncompressed RIFF/AVI via ``core.videocodec`` (RIFF walk,
-  ``00db`` DIB frames, 8-bit palettized / 24-bit BGR, BT.601 luma —
-  the same DIB subset the BMP decoder handles); features are mean
-  brightnesses of evenly-sampled frames, and each decoded frame feeds
-  ``imagecodec.pixel_quality`` unchanged. Only formats genuinely
-  needing external libs (MJPG/h264/mp4...) return
-  'decoder_unavailable'.
+Images decode from real bytes: PNG / BMP / PGM / PPM via the
+pure-stdlib codecs in ``core.imagecodec`` (zlib inflate + scanline
+unfilter for PNG); features are 4x4 block means of actual pixels, and
+``extract_media_quality`` runs the reference's pixel kernels
+(white-ratio blank, mean-brightness, std-contrast, dark/bright-area
+shadow/glare) on the decoded raster. Other media types (audio, video)
+go beyond the reference and take the 'unsupported' lane.
 
 Spark-side design (100 TB):
 
 - schema: ``media`` = binary payload + struct metadata
-  (media_type/width/height/duration_ms/codec);
+  (media_type/width/height/codec);
 - partition-friendly batch iteration via ``mapInPandas`` (streamed Arrow
   batches: payloads never concatenate into one driver-side blob — each
   batch holds a bounded number of binary cells);
-- per-modality dispatch (image -> pixel features, audio -> frame
-  energies, video -> sampled frame features);
 - downstream ops are ordinary columns (the feature vector feeds the
   similarity operators unchanged; the binary never travels past the
   decode stage).
@@ -57,11 +45,10 @@ from documentai_spark.core.imagecodec import (
 
 MEDIA_SCHEMA = StructType([
     StructField("media_id", LongType(), False),
-    StructField("media_type", StringType(), False),   # image|audio|video
+    StructField("media_type", StringType(), False),   # only image decodes
     StructField("payload", BinaryType(), False),      # opaque encoded bytes
     StructField("width", IntegerType(), True),
     StructField("height", IntegerType(), True),
-    StructField("duration_ms", IntegerType(), True),
     StructField("codec", StringType(), True),
 ])
 
@@ -87,27 +74,6 @@ QUALITY_SCHEMA = StructType([
 N_FEATURES = 16
 
 
-def _decode_audio(payload: bytes) -> list[float]:
-    """REAL decoder: RIFF/WAVE PCM via core.audiocodec; returns
-    N_FEATURES per-frame RMS energies (each in [0, 1]). Raises
-    NotImplementedError for non-PCM encodings (opus/mp3/float need libs
-    this sandbox lacks), ValueError/struct.error on corrupt bytes."""
-    from documentai_spark.core.audiocodec import decode_wav, frame_energies
-    _rate, samples = decode_wav(payload)
-    return frame_energies(samples, n_frames=N_FEATURES)
-
-
-def _decode_video(payload: bytes) -> list[float]:
-    """REAL decoder: uncompressed RIFF/AVI via core.videocodec; returns
-    N_FEATURES per-sampled-frame mean brightnesses (each in [0, 1]).
-    Raises NotImplementedError for compressed streams / non-AVI
-    containers (mp4/h264 need libs this sandbox lacks), ValueError /
-    struct.error on corrupt bytes."""
-    from documentai_spark.core.videocodec import decode_avi, frame_features
-    _fps, frames = decode_avi(payload)
-    return frame_features(frames, n_frames=N_FEATURES)
-
-
 def extract_media_features(df: DataFrame) -> DataFrame:
     """media rows -> per-item feature vectors via mapInPandas.
 
@@ -117,32 +83,23 @@ def extract_media_features(df: DataFrame) -> DataFrame:
     MBs each. Output rows are narrow (features only) — the binary never
     travels further down the plan.
 
-    decode_ok: 'ok' | 'unsupported' (unknown media_type / null payload) |
-    'decoder_unavailable' (format needing absent libs) | 'corrupt'.
+    decode_ok: 'ok' | 'unsupported' (non-image media_type / null
+    payload) | 'decoder_unavailable' (image format needing absent libs)
+    | 'corrupt'.
     """
     def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             feats = []
             oks = []
             for mt, payload in zip(pdf["media_type"], pdf["payload"]):
-                if payload is None:
+                if mt != "image" or payload is None:
                     feats.append([0.0] * N_FEATURES)
                     oks.append("unsupported")
                     continue
                 try:
-                    if mt == "image":
-                        gray = decode_image(bytes(payload))
-                        feats.append(block_features(gray, grid=4))
-                        oks.append("ok")
-                    elif mt == "audio":
-                        feats.append(_decode_audio(bytes(payload)))
-                        oks.append("ok")
-                    elif mt == "video":
-                        feats.append(_decode_video(bytes(payload)))
-                        oks.append("ok")
-                    else:
-                        feats.append([0.0] * N_FEATURES)
-                        oks.append("unsupported")
+                    gray = decode_image(bytes(payload))
+                    feats.append(block_features(gray, grid=4))
+                    oks.append("ok")
                 except NotImplementedError:
                     feats.append([0.0] * N_FEATURES)
                     oks.append("decoder_unavailable")
@@ -192,52 +149,22 @@ def extract_media_quality(df: DataFrame) -> DataFrame:
 
 
 def synthesize_media(spark, n: int = 64, seed: int = 42) -> DataFrame:
-    """Deterministic synthetic media table, ALL payloads real encodings:
-    image rows PNG / BMP / PGM round-robin over hash-derived pixel
-    blocks; audio rows RIFF/WAVE PCM16 over hash-derived sample buffers;
-    video rows uncompressed 8-bit AVI over hash-derived frame stacks."""
-    from documentai_spark.core.audiocodec import encode_wav
+    """Deterministic synthetic media table of image rows with real
+    encodings: PNG / BMP / PGM round-robin over hash-derived pixel
+    blocks."""
     from documentai_spark.core.imagecodec import (
         encode_bmp, encode_pgm, encode_png,
     )
-    from documentai_spark.core.videocodec import encode_avi
     encoders = (encode_png, encode_bmp, encode_pgm)
     codec_names = ("png", "bmp", "pgm")
     rows = []
-    types = ("image", "audio", "video")
     for i in range(n):
         h = hashlib.md5(f"{seed}|media|{i}".encode()).digest()
-        mt = types[i % 3]
-        if mt == "image":
-            w = 16 + (i * 5) % 48
-            ht = 12 + (i * 3) % 36
-            buf = (h * ((w * ht) // len(h) + 1))[:w * ht]
-            gray = np.frombuffer(buf, dtype=np.uint8).reshape(ht, w)
-            enc = encoders[(i // 3) % 3]
-            payload = enc(gray)
-            rows.append((i, mt, bytearray(payload), w, ht, None,
-                         codec_names[(i // 3) % 3]))
-        elif mt == "audio":
-            rate = 8000
-            n_samples = 256 + (i % 50) * 64
-            buf = (h * (n_samples * 2 // len(h) + 1))[:n_samples * 2]
-            samples = np.frombuffer(buf, dtype="<i2")
-            payload = encode_wav(samples, rate=rate, bits=16)
-            rows.append((i, mt, bytearray(payload), None, None,
-                         int(n_samples * 1000 / rate), "pcm_s16le"))
-        else:
-            fps = 10
-            n_frames = 2 + i % 7
-            w = 8 + (i * 3) % 24
-            ht = 6 + (i * 5) % 18
-            frames = []
-            for fidx in range(n_frames):
-                fh = hashlib.md5(f"{seed}|frame|{i}|{fidx}".encode()) \
-                    .digest()
-                buf = (fh * ((w * ht) // len(fh) + 1))[:w * ht]
-                frames.append(np.frombuffer(buf, dtype=np.uint8)
-                              .reshape(ht, w))
-            payload = encode_avi(frames, fps=fps)
-            rows.append((i, mt, bytearray(payload), w, ht,
-                         int(n_frames * 1000 / fps), "rawvideo"))
+        w = 16 + (i * 5) % 48
+        ht = 12 + (i * 3) % 36
+        buf = (h * ((w * ht) // len(h) + 1))[:w * ht]
+        gray = np.frombuffer(buf, dtype=np.uint8).reshape(ht, w)
+        payload = encoders[i % 3](gray)
+        rows.append((i, "image", bytearray(payload), w, ht,
+                     codec_names[i % 3]))
     return spark.createDataFrame(rows, MEDIA_SCHEMA)

@@ -1,12 +1,13 @@
-"""Streaming extraction: the batch operators under readStream.
+"""Streaming extraction and curation: the batch operators under readStream.
 
 Use case at scale: transcripts land continuously in the Iceberg table (or
 a file/Kafka source); extraction + quality + verdict run per micro-batch
 with exactly-once file sinks. The per-turn stages are stateless, so the
 only streaming-specific pieces are:
 
-- watermark on ``ts`` for the optional windowed rollup (late turns beyond
-  the watermark are dropped from aggregates, never from extraction);
+- keyed state for the first-wins exact dedup (``streaming_first_wins_dedup``
+  and ``streaming_curate``), with an optional event-time TTL over a
+  watermark on ``ts``;
 - checkpointLocation for exactly-once progress (the streaming analog of
   plans/checkpoint.py's per-partition manifests).
 """
@@ -76,149 +77,13 @@ def streaming_extraction(stream: DataFrame) -> DataFrame:
     return with_verdict(with_extraction_and_quality(stream))
 
 
-def streaming_verdict_rollup(stream: DataFrame,
-                             window: str = "5 minutes",
-                             watermark: str = "10 minutes") -> DataFrame:
-    """Windowed verdict counts with late-data handling (watermark)."""
-    out = streaming_extraction(stream)
-    return (out.withWatermark("ts", watermark)
-               .groupBy(F.window("ts", window), "verdict")
-               .agg(F.count(F.lit(1)).alias("n_turns")))
-
-
 def streaming_classified(stream: DataFrame, cfg) -> DataFrame:
     """Stateless per-turn classification on a stream: extraction +
     quality + the 3-technique vote (row-local, so trivially streamable).
     Consecutive grouping is a batch concern — the reference groups per
-    uploaded document; the streaming analog is the per-turn category
-    plus the windowed rollup below."""
+    uploaded document; the streaming analog is the per-turn category."""
     from documentai_spark.operators.classify import classify_with_vote
     return classify_with_vote(streaming_extraction(stream), cfg)
-
-
-def streaming_category_rollup(stream: DataFrame, cfg,
-                              window: str = "5 minutes",
-                              watermark: str = "10 minutes") -> DataFrame:
-    """Windowed per-category turn counts with late-data handling."""
-    out = streaming_classified(stream, cfg)
-    return (out.withWatermark("ts", watermark)
-               .groupBy(F.window("ts", window), "category")
-               .agg(F.count(F.lit(1)).alias("n_turns")))
-
-
-def streaming_conversation_totals(stream: DataFrame) -> DataFrame:
-    """Custom stateful operator via ``applyInPandasWithState``: running
-    per-conversation totals that survive across micro-batches.
-
-    This is the streaming form of the batch per-conversation rollup
-    (q_t_conv_stats): state = (n_turns, total_chars, max_turn_idx) per
-    conv_id; every micro-batch that touches a conversation emits its
-    updated totals (outputMode=update). At 10^12-turn scale the state
-    store shards by conv_id with the shuffle, so a conversation's state
-    lives on exactly one executor; mega-conversations are a single hot
-    key only for this aggregate's tiny fixed-size state, not for the
-    extraction work. A production variant would add EventTimeTimeout to
-    emit-and-evict closed conversations (state.setTimeoutTimestamp on the
-    watermark + gap); the fixture drain is one-shot, so the test pins the
-    no-timeout running-total semantics.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    out_type = ("conv_id string, n_turns bigint, total_chars bigint, "
-                "max_turn_idx int")
-    state_type = "n_turns bigint, total_chars bigint, max_turn_idx int"
-
-    def update(key, pdfs, state):
-        n, chars, mx = state.get if state.exists else (0, 0, -1)
-        for pdf in pdfs:
-            n += len(pdf)
-            chars += int(pdf["text"].str.len().sum())
-            tm = pdf["turn_idx"].max()        # NaN when all-null (r7
-            if not pd.isna(tm):               # review): int(NaN) would
-                mx = max(mx, int(tm))         # kill the stream
-        state.update((n, chars, mx))
-        yield pd.DataFrame([{"conv_id": key[0], "n_turns": n,
-                             "total_chars": chars, "max_turn_idx": mx}])
-
-    return (stream.groupBy("conv_id")
-            .applyInPandasWithState(update, out_type, state_type,
-                                    "update", GroupStateTimeout.NoTimeout))
-
-
-def streaming_conversation_totals_final(stream: DataFrame,
-                                        gap: str = "30 minutes",
-                                        watermark: str = "10 minutes",
-                                        ts_col: str = "ts") -> DataFrame:
-    """Emit-and-evict variant of ``streaming_conversation_totals``: a
-    conversation's totals are emitted exactly ONCE, when the event-time
-    watermark passes its last activity + ``gap`` (the conversation is
-    closed), and its state is evicted. Append output — every emission is
-    final, so file sinks work directly.
-
-    This is the bounded-state production shape: state size is the number
-    of OPEN conversations, not all conversations ever seen. The timeout
-    timestamp is re-armed on every batch that touches the conversation
-    (last activity + gap), so long-running conversations stay open; the
-    stored ``last_ms`` makes re-arming monotone even when a later batch
-    carries earlier event times.
-
-    Null event times: rows with a NULL ``ts`` update the totals but
-    carry no event-time information. A conversation whose EVERY row so
-    far is null-ts anchors its gap at the current WATERMARK (r7 review
-    — anchoring at epoch 0 closed it on the very next watermark
-    advance, and a later row then emitted a SECOND final row). The
-    exactly-once guarantee is therefore per admission window for
-    all-null-ts conversations — a null-ts row arriving after such a
-    close re-opens the conversation (the same windowed tradeoff as the
-    ttl'd dedup); rows with REAL event times past the close are dropped
-    by the watermark, keeping the strict exactly-once for timestamped
-    data.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    gap_ms = _interval_ms(gap)
-    out_type = ("conv_id string, n_turns bigint, total_chars bigint, "
-                "max_turn_idx int")
-    state_type = ("n_turns bigint, total_chars bigint, max_turn_idx int, "
-                  "last_ms bigint")
-
-    def update(key, pdfs, state):
-        if state.hasTimedOut:
-            n, chars, mx, _last = state.get
-            state.remove()
-            yield pd.DataFrame([{"conv_id": key[0], "n_turns": n,
-                                 "total_chars": chars,
-                                 "max_turn_idx": mx}])
-            return
-        n, chars, mx, last = state.get if state.exists else (0, 0, -1, 0)
-        for pdf in pdfs:
-            n += len(pdf)
-            chars += int(pdf["text"].str.len().sum())
-            tm = pdf["turn_idx"].max()
-            if not pd.isna(tm):
-                mx = max(mx, int(tm))
-            last = max(last, _event_ms(pdf[ts_col]))
-        state.update((n, chars, mx, last))
-        # must be strictly past the current watermark or Spark rejects
-        # it. A conversation with NO observed event time (last == 0 —
-        # every ts null so far) anchors the gap at the WATERMARK, not
-        # epoch 0 (r7 review): anchoring at 0 armed the timeout at
-        # wm+1, so the conversation closed on the next watermark
-        # advance and a later row re-created state and emitted a
-        # SECOND 'final' row — violating the emitted-exactly-once
-        # contract this append-mode operator exists for.
-        anchor = last if last > 0 else state.getCurrentWatermarkMs()
-        state.setTimeoutTimestamp(
-            max(anchor + gap_ms, state.getCurrentWatermarkMs() + 1))
-        return  # nothing emitted until the conversation closes
-
-    return (stream.withWatermark(ts_col, watermark)
-            .groupBy("conv_id")
-            .applyInPandasWithState(update, out_type, state_type,
-                                    "append",
-                                    GroupStateTimeout.EventTimeTimeout))
 
 
 def streaming_first_wins_dedup(stream: DataFrame,

@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from documentai_spark.operators.ml_classify import (
-    predict_with_topk, synthesize_labeled_docs, train_classifier,
+    predict_with_topk, synthesize_labeled_docs, train_frozen_classifier,
 )
 
 
@@ -16,7 +16,7 @@ def model_and_data(spark):
     data = synthesize_labeled_docs(spark, n_per_class=100)
     train = data.filter(F.col("doc_id") % 5 != 0)
     test = data.filter(F.col("doc_id") % 5 == 0)
-    model = train_classifier(train)
+    model = train_frozen_classifier(train)
     return model, test
 
 
@@ -223,7 +223,7 @@ def test_18class_fidelity_benchmark(spark):
     assert data.count() == 558
     train = data.filter(F.col("doc_id") % 5 != 0)
     test = data.filter(F.col("doc_id") % 5 == 0)
-    model = train_classifier(train)
+    model = train_frozen_classifier(train)
     assert len(model.labels) == 18
     pred = predict_with_topk(model, test)
     acc = pred.select(

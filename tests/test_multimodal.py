@@ -1,8 +1,7 @@
-"""Multimodal tests: REAL image decode (pure-stdlib PNG/BMP/PGM codecs),
-REAL audio decode (RIFF/WAVE PCM via core.audiocodec), and REAL video
-decode (uncompressed RIFF/AVI via core.videocodec, r5) through the
-mapInPandas path — features come from actual pixels / samples / frames —
-plus schema/batching/determinism plumbing."""
+"""Multimodal tests: REAL image decode (pure-stdlib PNG/BMP/PGM codecs)
+through the mapInPandas path — features come from actual pixels — the
+'unsupported' lane for non-image media, plus schema/batching/determinism
+plumbing."""
 
 from __future__ import annotations
 
@@ -62,7 +61,7 @@ def test_image_features_are_real_pixels(spark):
     gray = np.tile(np.linspace(0, 255, 32, dtype=np.uint8), (16, 1))
     payload = encode_png(gray)
     df = spark.createDataFrame(
-        [(0, "image", bytearray(payload), 32, 16, None, "png")],
+        [(0, "image", bytearray(payload), 32, 16, "png")],
         MEDIA_SCHEMA)
     row = extract_media_features(df).collect()[0]
     assert row.decode_ok == "ok"
@@ -104,10 +103,10 @@ def test_media_pixel_quality_kernels(spark):
     black = np.zeros((20, 30), dtype=np.uint8)
     noisy = (np.arange(600, dtype=np.uint8) % 251).reshape(20, 30)
     df = spark.createDataFrame(
-        [(0, "image", bytearray(encode_bmp(white)), 30, 20, None, "bmp"),
-         (1, "image", bytearray(encode_bmp(black)), 30, 20, None, "bmp"),
-         (2, "image", bytearray(encode_bmp(noisy)), 30, 20, None, "bmp"),
-         (3, "audio", bytearray(b"not an image"), None, None, 5, "opus")],
+        [(0, "image", bytearray(encode_bmp(white)), 30, 20, "bmp"),
+         (1, "image", bytearray(encode_bmp(black)), 30, 20, "bmp"),
+         (2, "image", bytearray(encode_bmp(noisy)), 30, 20, "bmp"),
+         (3, "audio", bytearray(b"not an image"), None, None, "opus")],
         MEDIA_SCHEMA)
     rows = {r.media_id: r for r in extract_media_quality(df).collect()}
     assert set(rows) == {0, 1, 2}          # audio dropped
@@ -120,7 +119,6 @@ def test_media_pixel_quality_kernels(spark):
 def test_corrupt_and_unsupported_payloads(spark):
     import struct
 
-    from documentai_spark.core.audiocodec import encode_wav
     from documentai_spark.core.imagecodec import PNG_MAGIC
     from documentai_spark.operators.multimodal import (
         MEDIA_SCHEMA, extract_media_quality,
@@ -136,294 +134,47 @@ def test_corrupt_and_unsupported_payloads(spark):
                b"\0\0\0\0" +
                struct.pack(">I", 0) + b"IEND" + b"\0\0\0\0")
 
+    def riff(form, body):
+        return b"RIFF" + struct.pack("<I", 4 + len(body)) + form + body
+
+    def chunk(cid, payload):
+        return cid + struct.pack("<I", len(payload)) + payload
+
+    # well-formed mono PCM16 WAV and one-frame uncompressed 8-bit AVI:
+    # audio and video are not decoded, so valid payloads are
+    # 'unsupported' just like garbage ones
+    pcm = struct.pack("<8h", 0, 8192, 16384, 8192, 0, -8192, -16384, -8192)
+    wav = riff(b"WAVE", chunk(b"fmt ", struct.pack("<HHIIHH", 1, 1, 8000,
+                                                    16000, 2, 16))
+               + chunk(b"data", pcm))
+    gray_palette = b"".join(bytes((v, v, v, 0)) for v in range(256))
+    strf = struct.pack("<IiiHHIIiiII", 40, 4, 4, 1, 8, 0, 16, 0, 0, 256,
+                       0) + gray_palette
+    avih = struct.pack("<14I", 100000, 0, 0, 0, 1, 0, 1, 16, 4, 4,
+                       0, 0, 0, 0)
+    hdrl = chunk(b"LIST", b"hdrl" + chunk(b"avih", avih) + chunk(
+        b"LIST", b"strl" + chunk(b"strh", b"vids" + bytes(52))
+        + chunk(b"strf", strf)))
+    avi = riff(b"AVI ", hdrl + chunk(b"LIST", b"movi"
+                                     + chunk(b"00db", bytes(range(16)))))
+
     df = spark.createDataFrame(
-        [(0, "image", bytearray(b"\xff\xd8\xff JPEG-ish"), 1, 1, None,
-          "jpeg"),
-         (1, "image", bytearray(b"BM garbage"), 1, 1, None, "bmp"),
-         (2, "image", bytearray(bad_png), 4, 4, None, "png"),
-         (3, "audio", bytearray(b"RIFFxxxxWAVEfmt "), None, None, 5,
-          "pcm_s16le"),
-         (4, "audio", bytearray(b"OggSopus-like"), None, None, 5, "opus")],
+        [(0, "image", bytearray(b"\xff\xd8\xff JPEG-ish"), 1, 1, "jpeg"),
+         (1, "image", bytearray(b"BM garbage"), 1, 1, "bmp"),
+         (2, "image", bytearray(bad_png), 4, 4, "png"),
+         (3, "audio", bytearray(wav), None, None, "pcm_s16le"),
+         (4, "video", bytearray(avi), 4, 4, "rawvideo")],
         MEDIA_SCHEMA)
     rows = {r.media_id: r for r in extract_media_features(df).collect()}
     assert rows[0].decode_ok == "decoder_unavailable"   # unknown magic
     assert rows[1].decode_ok == "corrupt"               # truncated BMP
     assert rows[2].decode_ok == "corrupt"               # zlib.error IDAT
-    assert rows[3].decode_ok == "corrupt"               # truncated WAV
-    assert rows[4].decode_ok == "decoder_unavailable"   # non-RIFF (opus)
+    for mid in (3, 4):                                  # audio, video
+        assert rows[mid].decode_ok == "unsupported"
+        assert rows[mid].features == [0.0] * N_FEATURES
 
     # extract_media_quality must likewise drop (not crash on) the bad
-    # PNG/BMP rows — zlib.error and struct.error lanes
+    # PNG/BMP rows — zlib.error and struct.error lanes — and the
+    # non-image rows
     q = extract_media_quality(df).collect()
     assert q == []
-
-    # non-PCM WAV (IEEE float fmt tag 3): decoder_unavailable lane
-    float_fmt = struct.pack("<HHIIHH", 3, 1, 8000, 32000, 4, 32)
-    nonpcm = (b"RIFF" + struct.pack("<I", 28) + b"WAVE" +
-              b"fmt " + struct.pack("<I", 16) + float_fmt +
-              b"data" + struct.pack("<I", 0))
-    df2 = spark.createDataFrame(
-        [(0, "audio", bytearray(nonpcm), None, None, 0, "pcm_f32le")],
-        MEDIA_SCHEMA)
-    assert extract_media_features(df2).collect()[0].decode_ok == \
-        "decoder_unavailable"
-
-
-def test_audio_features_are_real_samples(spark):
-    """Real WAV bytes through mapInPandas must yield the exact per-frame
-    RMS energies of the encoded samples — the decode is real, not a
-    payload-hash fake."""
-    import numpy as np
-
-    from documentai_spark.core.audiocodec import (
-        decode_wav, encode_wav, frame_energies,
-    )
-    from documentai_spark.operators.multimodal import MEDIA_SCHEMA
-
-    # a loud first half and a silent second half: energies must reflect it
-    samples = np.concatenate([
-        np.full(512, 16384, dtype=np.int16),
-        np.zeros(512, dtype=np.int16),
-    ])
-    payload = encode_wav(samples, rate=8000, bits=16)
-    rate, decoded = decode_wav(payload)
-    assert rate == 8000 and len(decoded) == 1024
-    expected = frame_energies(decoded, n_frames=N_FEATURES)
-
-    df = spark.createDataFrame(
-        [(0, "audio", bytearray(payload), None, None, 128, "pcm_s16le")],
-        MEDIA_SCHEMA)
-    row = extract_media_features(df).collect()[0]
-    assert row.decode_ok == "ok"
-    assert row.features == expected
-    # first-half frames loud (0.5 RMS), second-half silent
-    assert all(abs(f - 0.5) < 1e-9 for f in row.features[:8])
-    assert all(f == 0.0 for f in row.features[8:])
-
-
-def test_audio_codec_stereo_and_8bit():
-    """Stereo averages to mono; 8-bit unsigned PCM de-biases at 128."""
-    import struct as _struct
-
-    import numpy as np
-
-    from documentai_spark.core.audiocodec import decode_wav, encode_wav
-
-    # hand-build a stereo PCM16 file: L=+8192, R=-8192 -> mono 0
-    raw = np.array([8192, -8192] * 64, dtype="<i2").tobytes()
-    fmt = _struct.pack("<HHIIHH", 1, 2, 8000, 32000, 4, 16)
-    wav = (b"RIFF" + _struct.pack("<I", 36 + len(raw)) + b"WAVE" +
-           b"fmt " + _struct.pack("<I", 16) + fmt +
-           b"data" + _struct.pack("<I", len(raw)) + raw)
-    rate, mono = decode_wav(wav)
-    assert rate == 8000 and len(mono) == 64
-    assert np.all(mono == 0.0)
-
-    # 8-bit round-trip: 128 is silence, 255 ~ +1, 0 = -1
-    pay = encode_wav(np.array([128, 255, 0, 128], dtype=np.uint8),
-                     rate=4000, bits=8)
-    rate8, s8 = decode_wav(pay)
-    assert rate8 == 4000
-    assert s8[0] == 0.0 and s8[3] == 0.0
-    assert abs(s8[1] - 127 / 128) < 1e-12 and s8[2] == -1.0
-
-
-def test_video_features_are_real_frames(spark):
-    """Real AVI bytes through mapInPandas must yield the exact sampled
-    per-frame mean brightnesses of the encoded frames — the decode is
-    real, not a payload-hash fake (the WAV test pattern)."""
-    import numpy as np
-
-    from documentai_spark.core.videocodec import (
-        decode_avi, encode_avi, frame_features,
-    )
-    from documentai_spark.operators.multimodal import MEDIA_SCHEMA
-
-    # 4 flat frames at 0 / 85 / 170 / 255: sampled features are exact
-    frames = [np.full((12, 10), v, dtype=np.uint8)
-              for v in (0, 85, 170, 255)]
-    payload = encode_avi(frames, fps=5)
-    fps, decoded = decode_avi(payload)
-    assert fps == 5.0 and len(decoded) == 4
-    assert all(np.array_equal(a, b) for a, b in zip(decoded, frames))
-    expected = frame_features(decoded, n_frames=N_FEATURES)
-    assert expected[:4] == [0.0] * 4
-    assert expected[12:] == [1.0] * 4
-
-    df = spark.createDataFrame(
-        [(0, "video", bytearray(payload), 10, 12, 800, "rawvideo")],
-        MEDIA_SCHEMA)
-    row = extract_media_features(df).collect()[0]
-    assert row.decode_ok == "ok"
-    assert row.features == expected
-
-
-def test_video_nonflat_frame_roundtrip():
-    """Arbitrary pixel content survives the 8-bit palettized round-trip
-    bit-exactly (identity grayscale palette + bottom-up rows + stride
-    padding), including non-multiple-of-4 widths."""
-    import numpy as np
-
-    from documentai_spark.core.videocodec import decode_avi, encode_avi
-
-    rng = [(np.arange(9 * 7, dtype=np.uint8).reshape(9, 7) * 13 + f) % 251
-           for f in range(3)]
-    frames = [f.astype(np.uint8) for f in rng]
-    _fps, decoded = decode_avi(encode_avi(frames, fps=25))
-    assert len(decoded) == 3
-    for a, b in zip(decoded, frames):
-        assert np.array_equal(a, b)
-
-
-def test_video_24bit_bgr_frame():
-    """A hand-built 24-bit BGR AVI decodes through the same BT.601 luma
-    as the BMP path (pinning the DIB convention reuse)."""
-    import struct
-
-    import numpy as np
-
-    from documentai_spark.core.imagecodec import _luma
-    from documentai_spark.core.videocodec import decode_avi
-
-    w, h = 2, 1
-    # pixels (RGB): (255,0,0), (0,255,0) -> stored BGR, row padded to 8
-    row = bytes([0, 0, 255, 0, 255, 0]) + b"\x00\x00"
-    strf = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(row),
-                       0, 0, 0, 0)
-    avih = struct.pack("<IIIIIIIIII4I", 100000, 0, 0, 0, 1, 0, 1,
-                       len(row), w, h, 0, 0, 0, 0)
-
-    def chunk(cid, payload):
-        return cid + struct.pack("<I", len(payload)) + payload + (
-            b"\x00" if len(payload) & 1 else b"")
-
-    def lst(ltype, payload):
-        return chunk(b"LIST", ltype + payload)
-
-    hdrl = lst(b"hdrl", chunk(b"avih", avih)
-               + lst(b"strl", chunk(b"strf", strf)))
-    payload = b"AVI " + hdrl + lst(b"movi", chunk(b"00db", row))
-    avi = b"RIFF" + struct.pack("<I", len(payload)) + payload
-    fps, frames = decode_avi(avi)
-    assert fps == 10.0 and len(frames) == 1
-    want = _luma(np.array([[[255, 0, 0], [0, 255, 0]]], dtype=np.uint8))
-    assert np.array_equal(frames[0], want)
-
-
-def test_video_audio_first_avi_skips_waveformatex():
-    """An AVI whose FIRST strl is an audio stream must not parse that
-    stream's WAVEFORMATEX strf as a BITMAPINFOHEADER (ADVICE r5): the
-    decoder skips to the vids strl's strf and reads the video frames
-    from the second stream's movi chunks (01db)."""
-    import struct
-
-    import numpy as np
-
-    from documentai_spark.core.videocodec import decode_avi, encode_avi
-
-    frame = (np.arange(6 * 8, dtype=np.uint8).reshape(6, 8) * 3) % 251
-    base = encode_avi([frame], fps=10)
-
-    def chunk(cid, payload):
-        return cid + struct.pack("<I", len(payload)) + payload + (
-            b"\x00" if len(payload) & 1 else b"")
-
-    def lst(ltype, payload):
-        return chunk(b"LIST", ltype + payload)
-
-    # splice the encoder's video strl/avih/frame out of `base`
-    def sub(tag):
-        off = base.index(tag)
-        ln = struct.unpack_from("<I", base, off + 4)[0]
-        return base[off + 8:off + 8 + ln]
-
-    avih = sub(b"avih")
-    vid_strl = lst(b"strl", chunk(b"strh", sub(b"strh"))
-                   + chunk(b"strf", sub(b"strf")))
-    # audio stream FIRST: strh 'auds' + a 16-byte WAVEFORMAT strf whose
-    # leading dwords would parse as absurd DIB geometry if misread
-    aud_strh = b"auds" + b"\x00" * 52
-    aud_strf = struct.pack("<HHIIHH", 1, 1, 8000, 16000, 2, 16)
-    aud_strl = lst(b"strl", chunk(b"strh", aud_strh)
-                   + chunk(b"strf", aud_strf))
-    hdrl = lst(b"hdrl", chunk(b"avih", avih) + aud_strl + vid_strl)
-    movi = lst(b"movi", chunk(b"00wb", b"\x01\x02\x03\x04")
-               + chunk(b"01db", sub(b"00db")))
-    payload = b"AVI " + hdrl + movi
-    avi = b"RIFF" + struct.pack("<I", len(payload)) + payload
-
-    fps, frames = decode_avi(avi)
-    assert fps == 10.0 and len(frames) == 1
-    assert np.array_equal(frames[0], frame)
-
-
-def test_video_quality_kernels_on_frames():
-    """Decoded frames feed imagecodec.pixel_quality unchanged: a white
-    video frame scores blank, a black one scores shadow."""
-    import numpy as np
-
-    from documentai_spark.core.imagecodec import pixel_quality
-    from documentai_spark.core.videocodec import decode_avi, encode_avi
-
-    white = np.full((20, 30), 255, dtype=np.uint8)
-    black = np.zeros((20, 30), dtype=np.uint8)
-    _fps, frames = decode_avi(encode_avi([white, black], fps=10))
-    qw, qb = pixel_quality(frames[0]), pixel_quality(frames[1])
-    assert qw["px_blank"] == 1.0 and qw["px_shadow"] == 0.0
-    assert qb["px_shadow"] == 1.0 and qb["px_blank"] == 0.0
-
-
-def test_video_corrupt_and_unavailable_lanes(spark):
-    """mp4-ish magic -> decoder_unavailable; compressed AVI ->
-    decoder_unavailable; truncated / frame-mismatched AVI -> corrupt."""
-    import struct
-
-    import numpy as np
-
-    from documentai_spark.core.videocodec import encode_avi
-    from documentai_spark.operators.multimodal import MEDIA_SCHEMA
-
-    good = encode_avi([np.zeros((4, 4), dtype=np.uint8)], fps=10)
-    # flip the strf compression dword (offset: find strf, +8 header,
-    # +16 to biCompression)
-    comp_off = good.index(b"strf") + 8 + 16
-    compressed = (good[:comp_off] + struct.pack("<I", 0x47504A4D)
-                  + good[comp_off + 4:])
-    truncated = good[:len(good) // 2]
-    # frame chunk length lies: claim more bytes than the DIB carries
-    fr_off = good.index(b"00db") + 4
-    short_frame = (good[:fr_off] + struct.pack("<I", 9999)
-                   + good[fr_off + 4:])
-    df = spark.createDataFrame(
-        [(0, "video", bytearray(b"\x00\x00\x00 ftypmp42..."), 4, 4, 100,
-          "h264"),
-         (1, "video", bytearray(compressed), 4, 4, 100, "mjpg"),
-         (2, "video", bytearray(truncated), 4, 4, 100, "rawvideo"),
-         (3, "video", bytearray(short_frame), 4, 4, 100, "rawvideo"),
-         (4, "video", bytearray(good), 4, 4, 100, "rawvideo")],
-        MEDIA_SCHEMA)
-    rows = {r.media_id: r.decode_ok
-            for r in extract_media_features(df).collect()}
-    assert rows == {0: "decoder_unavailable", 1: "decoder_unavailable",
-                    2: "corrupt", 3: "corrupt", 4: "ok"}
-
-
-def test_truncated_riff_header_is_corrupt_not_unavailable():
-    """The error lane must not flip on truncation depth: RIFF magic with
-    a short header is structural damage ('corrupt' -> ValueError), the
-    same lane as the deeper 16-byte truncation; only a genuinely unknown
-    container magic is 'decoder_unavailable' (NotImplementedError)."""
-    import pytest
-
-    from documentai_spark.core.audiocodec import decode_wav
-    from documentai_spark.core.videocodec import decode_avi
-
-    for decode in (decode_wav, decode_avi):
-        with pytest.raises(ValueError):      # 10-byte truncated header
-            decode(b"RIFFxxxxWA")
-        with pytest.raises(ValueError):      # magic alone
-            decode(b"RIFF")
-        with pytest.raises(NotImplementedError):  # unknown magic, short
-            decode(b"OggS")
-        with pytest.raises(NotImplementedError):  # unknown magic, long
-            decode(b"\xff\xfb" + b"\x00" * 64)

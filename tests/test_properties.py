@@ -114,32 +114,6 @@ def test_plain_extraction_identity(text):
 
 
 @settings(max_examples=60, deadline=None)
-@given(st.lists(st.integers(min_value=-32768, max_value=32767),
-                min_size=0, max_size=600),
-       st.sampled_from([8000, 16000, 44100]))
-def test_wav_roundtrip_and_energy_bounds(samples, rate):
-    """encode_wav -> decode_wav is exact for PCM16; frame energies stay
-    in [0, 1] and are zero exactly when the signal is silent."""
-    import numpy as np
-
-    from documentai_spark.core.audiocodec import (
-        decode_wav, encode_wav, frame_energies,
-    )
-
-    arr = np.asarray(samples, dtype=np.int16)
-    got_rate, decoded = decode_wav(encode_wav(arr, rate=rate, bits=16))
-    assert got_rate == rate
-    assert len(decoded) == len(arr)
-    assert np.array_equal(decoded * 32768.0, arr.astype(np.float64))
-
-    e = frame_energies(decoded, n_frames=16)
-    assert len(e) == 16
-    assert all(0.0 <= x <= 1.0 for x in e)
-    if len(arr) and not np.any(arr):
-        assert all(x == 0.0 for x in e)
-
-
-@settings(max_examples=60, deadline=None)
 @given(st.text(max_size=300))
 def test_classify_norm_byte_lut_equals_regex(text):
     """_norm_batch (byte-LUT) == the re-based forms for ARBITRARY unicode

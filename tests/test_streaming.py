@@ -44,78 +44,16 @@ def test_stream_restart_is_exactly_once(spark, transcripts_path, tmp_path):
     assert n1 == n2
 
 
-def test_watermarked_rollup(spark, transcripts_path):
-    """Windowed verdict rollup with watermark: stream totals equal the
-    batch groupBy over the same windows (memory sink, complete mode)."""
-    from pyspark.sql import functions as F
-
-    from documentai_spark.streaming.pipeline import (
-        read_transcript_stream, streaming_verdict_rollup,
-    )
-    stream = read_transcript_stream(spark, transcripts_path)
-    q = (streaming_verdict_rollup(stream, window="10 minutes",
-                                  watermark="20 minutes")
-         .writeStream.format("memory").queryName("rollup")
-         .outputMode("complete").trigger(availableNow=True).start())
-    q.awaitTermination(300)
-    got = {(r.window.start, r.verdict): r.n_turns
-           for r in spark.sql("select * from rollup").collect()}
-    from documentai_spark.plans.pipeline import extraction_pipeline
-    batch = extraction_pipeline(spark.read.parquet(transcripts_path),
-                                ordered_output=False)
-    want = {((r.win.start), r.verdict): r.n
-            for r in batch.groupBy(F.window("ts", "10 minutes").alias("win"),
-                                   "verdict")
-                          .agg(F.count(F.lit(1)).alias("n")).collect()}
-    assert got == want and len(got) > 0
-
-
-def test_stateful_conversation_totals(spark, transcripts_path):
-    """applyInPandasWithState running totals: state accumulates across
-    micro-batches (maxFilesPerTrigger forces several), and the FINAL
-    emission per conversation equals the batch groupBy rollup."""
-    from pyspark.sql import functions as F
-
-    from documentai_spark.streaming.pipeline import (
-        read_transcript_stream, streaming_conversation_totals,
-    )
-
-    stream = read_transcript_stream(spark, transcripts_path,
-                                    max_files_per_trigger=2)
-    out = streaming_conversation_totals(stream)
-    q = (out.writeStream.format("memory").queryName("conv_totals")
-            .outputMode("update").trigger(availableNow=True).start())
-    q.awaitTermination(300)
-
-    # totals are monotone across updates -> max() per conv == final state
-    got = {r.conv_id: (r.n_turns, r.total_chars, r.max_turn_idx)
-           for r in spark.sql(
-               "SELECT conv_id, max(n_turns) n_turns, "
-               "max(total_chars) total_chars, max(max_turn_idx) "
-               "max_turn_idx FROM conv_totals GROUP BY conv_id").collect()}
-    want = {r.conv_id: (r.n_turns, r.total_chars, r.max_turn_idx)
-            for r in spark.read.parquet(transcripts_path)
-            .groupBy("conv_id")
-            .agg(F.count(F.lit(1)).alias("n_turns"),
-                 F.sum(F.length("text")).alias("total_chars"),
-                 F.max("turn_idx").alias("max_turn_idx")).collect()}
-    assert got == want
-
-
 def test_streaming_classified_equals_batch(spark, transcripts_path,
                                            tmp_path):
     """The classification vote is stateless, so the streamed per-turn
-    categories must equal the batch chain's on the same input; the
-    windowed per-category rollup must sum to the same totals."""
-    from pyspark.sql import functions as F
-
+    categories must equal the batch chain's on the same input."""
     from documentai_spark.operators.classify import (
         ClassifierConfig, classify_with_vote,
     )
     from documentai_spark.plans.pipeline import extraction_pipeline
     from documentai_spark.streaming.pipeline import (
         read_transcript_stream, start_to_parquet, streaming_classified,
-        streaming_category_rollup,
     )
 
     cfg = ClassifierConfig.compile({
@@ -140,19 +78,6 @@ def test_streaming_classified_equals_batch(spark, transcripts_path,
             for r in batch.select("conv_id", "turn_idx", "category",
                                   "vote_confidence").collect()}
     assert got == want
-
-    q2 = (streaming_category_rollup(
-              read_transcript_stream(spark, transcripts_path), cfg,
-              window="10 minutes", watermark="20 minutes")
-          .writeStream.format("memory").queryName("cat_rollup")
-          .outputMode("complete").trigger(availableNow=True).start())
-    q2.awaitTermination(300)
-    rolled = spark.sql("SELECT category, sum(n_turns) AS n FROM "
-                       "cat_rollup GROUP BY category").collect()
-    want_counts = {r.category: r.n for r in
-                   batch.groupBy("category").count()
-                        .withColumnRenamed("count", "n").collect()}
-    assert {r.category: r.n for r in rolled} == want_counts
 
 
 def test_streaming_first_wins_dedup(spark, transcripts_path, tmp_path):
@@ -313,43 +238,6 @@ def test_ttl_dedup_null_ts_rows_flow(spark, tmp_path):
     assert got == {(1, "timed row"), (2, "null ts row")}
 
 
-def test_conversation_totals_final_emit_and_evict(spark, tmp_path):
-    """Closed conversations are final-emitted exactly once when the
-    watermark passes last-activity + gap; open ones emit nothing."""
-    in_dir = str(tmp_path / "fin_in")
-    out_dir = str(tmp_path / "fin_out")
-    ckpt = str(tmp_path / "fin_ckpt")
-
-    from documentai_spark.streaming.pipeline import (
-        streaming_conversation_totals_final,
-    )
-
-    def build(stream):
-        return streaming_conversation_totals_final(
-            stream, gap="30 minutes", watermark="10 minutes")
-
-    _append_file(spark, in_dir,
-                 [("c1", 0, "hello", _T0), ("c1", 1, "world!", _mins(1)),
-                  ("c2", 0, "solo", _T0)], _CONV_DDL)
-    _drain(spark, in_dir, _CONV_DDL, out_dir, ckpt, build)
-    # advance watermark past c1/c2 close (last + 30m) across two drains:
-    # the advancer's own event time only becomes the watermark at the
-    # NEXT batch, so a second advancer batch is what fires the timeouts
-    _append_file(spark, in_dir, [("c3", 0, "adv", _mins(180))], _CONV_DDL)
-    _drain(spark, in_dir, _CONV_DDL, out_dir, ckpt, build)
-    _append_file(spark, in_dir, [("c4", 0, "adv2", _mins(360))], _CONV_DDL)
-    _drain(spark, in_dir, _CONV_DDL, out_dir, ckpt, build)
-
-    rows = spark.read.parquet(out_dir).collect()
-    got = sorted((r.conv_id, r.n_turns, r.total_chars, r.max_turn_idx)
-                 for r in rows)
-    # exactly once each, exact totals. c3 closes too: availableNow runs a
-    # finalize batch after each drain's watermark advance, so drain 3's
-    # extra batch sees wm = t0+350m > c3's t0+210m timeout. c4 (newest)
-    # is still open -> absent.
-    assert got == [("c1", 2, 11, 1), ("c2", 1, 4, 0), ("c3", 1, 3, 0)]
-
-
 def test_streaming_curate_crash_resume_exactly_once(spark, tmp_path):
     """Kill-and-restart evidence for the exactly-once claim (VERDICT r5
     #7): a CONTINUOUS streaming_curate query is stopped mid-stream after
@@ -453,90 +341,26 @@ def test_streaming_curate_matches_batch(spark, tmp_path):
 
 
 def test_null_turn_idx_and_null_ids_flow(spark, tmp_path):
-    """r7 review crash class: a micro-batch whose turn_idx values are
-    all NULL used to die at int(NaN) inside the stateful update, and a
-    NULL id in the first-wins winner selection could raise TypeError on
-    tuple comparison. Both flow now: totals treat missing turn_idx as
-    no-information (max stays over the known ones), and the dedup
-    winner is the nulls-last deterministic sort."""
+    """r7 review crash class: a NULL id in the first-wins winner
+    selection could raise TypeError on tuple comparison. It flows now:
+    the dedup winner is the nulls-last deterministic sort, and a NULL
+    turn_idx passes through untouched."""
     from documentai_spark.streaming.pipeline import (
-        streaming_conversation_totals, streaming_first_wins_dedup,
+        streaming_first_wins_dedup,
     )
-
-    in_dir = str(tmp_path / "nti_in")
-    _append_file(spark, in_dir,
-                 [("c1", None, "aa", _T0), ("c1", None, "bbb", _T0),
-                  ("c2", 3, "x", _T0)], _CONV_DDL)
-    stream = spark.readStream.schema(_CONV_DDL).parquet(in_dir)
-    q = (streaming_conversation_totals(stream)
-         .writeStream.format("memory").queryName("nti_totals")
-         .outputMode("update").trigger(availableNow=True).start())
-    q.awaitTermination(300)
-    got = {r.conv_id: (r.n_turns, r.total_chars, r.max_turn_idx)
-           for r in spark.sql("SELECT * FROM nti_totals").collect()}
-    assert got == {"c1": (2, 5, -1), "c2": (1, 1, 3)}
 
     # first-wins with a NULL id among the duplicates: nulls sort LAST,
     # so the non-null-id copy wins deterministically, and nothing crashes
     in2 = str(tmp_path / "nid_in")
     _append_file(spark, in2,
                  [(None, 0, "dup text", _T0), ("c9", 1, "dup text", _T0),
-                  ("c8", 0, "other text", _T0)], _CONV_DDL)
+                  ("c8", None, "other text", _T0)], _CONV_DDL)
     out2 = str(tmp_path / "nid_out")
     _drain(spark, in2, _CONV_DDL, out2, str(tmp_path / "nid_ck"),
            lambda s: streaming_first_wins_dedup(s))
-    got2 = {(r.conv_id, r.text)
+    got2 = {(r.conv_id, r.turn_idx, r.text)
             for r in spark.read.parquet(out2).collect()}
-    assert got2 == {("c8", "other text"), ("c9", "dup text")}
-
-
-def test_totals_final_null_ts_conversation_gap_honored(spark, tmp_path):
-    """r7 review: an all-null-ts conversation used to anchor its gap at
-    epoch 0, so it closed on the very next watermark advance (the gap
-    was never honored) and a later row emitted a SECOND final row. The
-    gap now anchors at the watermark: the conversation accumulates rows
-    across batches while the watermark stays inside wm+gap, closes
-    once, and carries ALL its rows in the single final emission."""
-    from documentai_spark.streaming.pipeline import (
-        streaming_conversation_totals_final,
-    )
-
-    in_dir = str(tmp_path / "nfg_in")
-    out_dir = str(tmp_path / "nfg_out")
-    ckpt = str(tmp_path / "nfg_ck")
-
-    def build(stream):
-        return streaming_conversation_totals_final(
-            stream, gap="30 minutes", watermark="10 minutes")
-
-    # drain 0: establish a real watermark BEFORE cx exists (at boot the
-    # watermark is 0, and any anchor is meaningless until one exists —
-    # a conv arriving in the same batch as the first-ever data closes
-    # on the first advance under ANY event-clock reading)
-    _append_file(spark, in_dir, [("adv", 0, "x", _T0)], _CONV_DDL)
-    _drain(spark, in_dir, _CONV_DDL, out_dir, ckpt, build)
-    # drain 1: cx is all-null-ts; its gap anchors at the CURRENT
-    # watermark (t0 - 10m)
-    _append_file(spark, in_dir,
-                 [("cx", 0, "aa", None), ("adv", 1, "x", _T0)], _CONV_DDL)
-    _drain(spark, in_dir, _CONV_DDL, out_dir, ckpt, build)
-    # drain 2: +5 minutes of watermark — INSIDE cx's wm+30m gap, so cx
-    # must still be open and absorb its second row (the old epoch-0
-    # anchor closed cx during this drain and split it into two finals)
-    _append_file(spark, in_dir,
-                 [("cx", 1, "bbb", None), ("adv", 2, "x", _mins(5))],
-                 _CONV_DDL)
-    _drain(spark, in_dir, _CONV_DDL, out_dir, ckpt, build)
-    # drain 3+4: push the watermark far past every gap
-    _append_file(spark, in_dir, [("adv", 3, "x", _mins(240))], _CONV_DDL)
-    _drain(spark, in_dir, _CONV_DDL, out_dir, ckpt, build)
-    _append_file(spark, in_dir, [("adv", 4, "x", _mins(480))], _CONV_DDL)
-    _drain(spark, in_dir, _CONV_DDL, out_dir, ckpt, build)
-
-    rows = [r for r in spark.read.parquet(out_dir).collect()
-            if r.conv_id == "cx"]
-    assert len(rows) == 1                       # ONE final, not two
-    assert (rows[0].n_turns, rows[0].total_chars) == (2, 5)
+    assert got2 == {("c8", None, "other text"), ("c9", 1, "dup text")}
 
 
 def test_first_wins_fp_collision_guard(spark):
